@@ -78,9 +78,9 @@ object Q {
     * only, no task scheduling).
     */
   def parquetRowCount(spark: SparkSession, path: String): Long =
-    rowCountCache.computeIfAbsent(path, { p =>
+    once("rowcount|" + path) {
       val conf = spark.sessionState.newHadoopConf()
-      val hp = new org.apache.hadoop.fs.Path(p)
+      val hp = new org.apache.hadoop.fs.Path(path)
       val fs = hp.getFileSystem(conf)
       // RECURSIVE walk: a partitioned table is date=.../part-*.parquet —
       // a flat listing would find zero files and silently report 0 rows,
@@ -91,32 +91,27 @@ object Q {
         else Seq.empty
       val files = walk(fs.getFileStatus(hp))
       require(files.nonEmpty,
-        s"parquetRowCount: no .parquet files under $p — refusing to " +
+        s"parquetRowCount: no .parquet files under $path — refusing to " +
           "report 0 rows for a plan-shape decision")
-      files.map { f =>
+      java.lang.Long.valueOf(files.map { f =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
         try r.getRecordCount finally r.close()
-      }.sum
-    })
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+      }.sum)
+    }.longValue()
 
-  /** Memoized `spark.read.parquet` for per-JVM STAGED state (the ANN
-    * index warm paths): each bare read re-resolves the datasource —
-    * driver-side file listing + footer schema read, ~50-150 ms — and a
-    * staged search pays it 2-4× per call (index frames + dimension).
-    * The returned DataFrame is an immutable logical plan, safe to reuse
-    * within its session; the key folds in the session identity so a new
-    * session never sees a stopped session's plan. ONLY for staged dirs,
-    * whose content is immutable for the JVM's lifetime by the
-    * `computeIfAbsent` write-once contract — the cached plan pins the
-    * file listing at first-read time, which is exactly wrong for a dir
-    * that changes (that is what corpusFingerprint-keyed REBUILDS are
-    * for, and why fixture tables are never read through this).
+  /** Memoized `spark.read.parquet` for STAGED dirs (the ANN index warm
+    * paths): each bare read re-resolves the datasource — driver-side
+    * file listing + footer schema read, ~50-150 ms — and a staged search
+    * pays it 2-4× per call. The plan is immutable and bound to its
+    * session, so it lives in the session scope of [[once]]. ONLY for
+    * staged dirs, which are written once under their pid × corpus-
+    * fingerprint key — the cached plan pins the file listing at first
+    * read, which is exactly wrong for a dir that changes (why fixture
+    * tables are never read through this).
     */
   def readStagedParquet(spark: SparkSession, path: String): DataFrame =
-    sessionMemo(spark, "read|" + path)(spark.read.parquet(path))
+    once(spark, "read|" + path)(spark.read.parquet(path))
 
   /** Conf-gated persist for pipeline INTERMEDIATES (the sketch/dedup/
     * ANN/graph multi-branch pipelines): `spark.graft.sketch.persistLevel`
@@ -140,23 +135,42 @@ object Q {
         df.persist(org.apache.spark.storage.StorageLevel.fromString(lvl))
     }
 
-  /** Per-SESSION memo for staged per-JVM state (staged-dir reads, index
-    * dimension probes). Keyed on the SparkSession INSTANCE inside a
-    * WeakHashMap (ADVICE r12): the previous identityHashCode-string key
-    * was not unique — two sessions can share a hash code, and one would
-    * have received a DataFrame bound to the other (possibly stopped)
-    * session — and it held every stopped session's plans forever. The
-    * weak key releases a session's whole memo when the session itself
-    * is collected, and instance identity cannot collide by construction.
+  /** THE staged-state memo: per-corpus state (staged dirs, footer row
+    * counts, staged-dir reads, the graph adjacency RDD and LPA labels)
+    * is built once and read by every later query. Two scopes:
+    *  - `once(key)` is JVM-wide, for on-disk staging — the dirs are
+    *    already pid × corpus-fingerprint keyed ([[jvmStageRoot]],
+    *    [[stageDir]], [[corpusTag]]), so the key is usually the dir and
+    *    the build returns it;
+    *  - `once(spark, key)` is per SESSION, for DataFrames and RDDs bound
+    *    to one: weak-keyed on the SparkSession INSTANCE (ADVICE r12), so
+    *    a session never receives another, possibly stopped, session's plan.
+    * RE-ENTRANCY SAFE: `computeIfAbsent` only installs a per-key lazy
+    * [[Cell]]; the build runs when the cell is forced, OUTSIDE the map
+    * operation, so builds may nest (node count → LPA labels → adjacency
+    * RDD; media staging → footer row count). A builder run inside
+    * `computeIfAbsent` throws "Recursive update" whenever two keys share
+    * a hash bin. Concurrent callers of one key build once (they wait on
+    * the cell); a build that throws drops its cell and the next call
+    * retries.
     */
-  def sessionMemo[T <: AnyRef](spark: SparkSession, key: String)(v: => T): T = {
-    val m = perSessionMemo.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, AnyRef]())
-    m.computeIfAbsent(key, _ => v).asInstanceOf[T]
+  def once[T <: AnyRef](key: String)(build: => T): T = force(jvmMemo, key, build)
+
+  def once[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
+    force(sessionMemos.computeIfAbsent(spark, _ => new Memo), key, build)
+
+  private final class Cell(build: => AnyRef) { lazy val value: AnyRef = build }
+  private type Memo = java.util.concurrent.ConcurrentHashMap[String, Cell]
+
+  private def force[T <: AnyRef](m: Memo, key: String, build: => T): T = {
+    val cell = m.computeIfAbsent(key, _ => new Cell(build))
+    try cell.value.asInstanceOf[T]
+    catch { case e: Throwable => m.remove(key, cell); throw e }
   }
-  private val perSessionMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, AnyRef]]())
+
+  private val jvmMemo = new Memo
+  private val sessionMemos = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Memo]())
 
   /** Cheap corpus fingerprint (sorted file list → fold of path, length,
     * mtime) for keying staged per-JVM state — indexes, bucketed layouts
@@ -391,7 +405,13 @@ object Q {
     df.sparkSession.conf.getOption("spark.graft.checkpoint.dir") match {
       case Some(dir) if dir.nonEmpty =>
         val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
+        // getCheckpointDir is `<qualified dir>/<uuid>`: compare its parent,
+        // or every cut would mint a fresh uuid directory.
+        val want = new org.apache.hadoop.fs.Path(dir)
+        val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+        if (!sc.getCheckpointDir.exists(
+            c => new org.apache.hadoop.fs.Path(c).getParent == qualified))
+          sc.setCheckpointDir(dir)
         df.checkpoint(eager)
       case _ => df.localCheckpoint(eager)
     }

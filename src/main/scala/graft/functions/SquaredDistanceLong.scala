@@ -38,7 +38,8 @@ case class SquaredDistanceLong(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "sq_dist_long"
 
-  private def elemNullable: Boolean = Seq(left, right).exists(_.dataType match {
+  // Once per instance: the interpreted path reads it on every row.
+  private lazy val elemNullable: Boolean = Seq(left, right).exists(_.dataType match {
     case ArrayType(_, n) => n
     case _ => false
   })

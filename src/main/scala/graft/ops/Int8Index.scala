@@ -117,20 +117,18 @@ object Int8Index {
     val metaTag = if (meta.isEmpty) "" else meta.mkString("_m", "_", "")
     val dir = graft.Q.jvmStageRoot("graft_int8") + s"/" +
       s"${safe}_k${kCells}_rc${rc}_r$refine$metaTag"
-    staged.computeIfAbsent(dir, { _ =>
+    graft.Q.once(dir) {
       val (cents, codes) = buildIndex(embs, kCells, rc, refine, meta)
       graft.Q.fileSized(cents).write.mode("overwrite").parquet(s"$dir/cents")
       graft.Q.fileSized(codes).write.mode("overwrite").parquet(s"$dir/codes")
       cents.unpersist(false)
-      java.lang.Boolean.TRUE
-    })
+      dir
+    }
     searchIndex(embs,
       graft.Q.readStagedParquet(spark, s"$dir/cents"),
       graft.Q.readStagedParquet(spark, s"$dir/codes"),
       nq, qp, shortlist, topK, candFilter, queryEmbs)
   }
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** The SEARCH half against a prebuilt (cents, codes) index: the nq
     * lowest-id vectors as queries, qp-cell coarse assignment folded

@@ -125,7 +125,7 @@ object IvfIndex {
     val safe = tag.replaceAll("[^A-Za-z0-9]", "_")
     val dir = graft.Q.jvmStageRoot("graft_ivf") + s"/" +
       s"${safe}_k${k}_p${nProbe}_r$refine"
-    staged.computeIfAbsent(dir, { _ =>
+    graft.Q.once(dir) {
       // Deliberately NOT fileSized (r17 negative result, the lshbase
       // twin): the cell-membership scan feeds pairsFromCells' self-join
       // — scan parallelism IS the candidate stage's parallelism, and a
@@ -135,8 +135,8 @@ object IvfIndex {
       assign(embs, k, nProbe, refine)
         .groupBy("vec_id").agg(sort_array(collect_list(col("cid"))).as("cells"))
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
+      dir
+    }
     // No persist: the parquet read serves both join sides — rescanning
     // the skinny staged table is cheaper than pinning executor memory.
     // Memoized read (r12): the bare spark.read re-resolved the
@@ -144,8 +144,6 @@ object IvfIndex {
     pairsFromCells(graft.Q.readStagedParquet(spark, dir), embs,
       broadcastReattach)
   }
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** [[centroids]] with the refined codebook staged to parquet per
     * JVM × tag × params — the [[annPairsStaged]] amortization contract
@@ -160,11 +158,11 @@ object IvfIndex {
     val spark = embs.sparkSession
     val safe = tag.replaceAll("[^A-Za-z0-9]", "_")
     val dir = graft.Q.jvmStageRoot("graft_ivf") + s"/cents_${safe}_k${k}_r$refine"
-    staged.computeIfAbsent(dir, { _ =>
+    graft.Q.once(dir) {
       graft.Q.fileSized(centroids(embs, k, refine))
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
+      dir
+    }
     graft.Q.readStagedParquet(spark, dir)
   }
 

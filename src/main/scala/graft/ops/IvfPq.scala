@@ -143,9 +143,9 @@ object IvfPq {
     // so a corpus refresh re-probes along with the rebuild (r12: the
     // warm path was paying this job plus three datasource re-resolutions
     // per call, ~0.5 s of the declared query's fixed cost).
-    val d = graft.Q.sessionMemo(spark, "ivfpqDim|" + dir)(
+    val d = graft.Q.once(spark, "ivfpqDim|" + dir)(
       Integer.valueOf(PqIndex.embeddingDim(embs, m))).intValue()
-    staged.computeIfAbsent(dir, { _ =>
+    graft.Q.once(dir) {
       val f = buildFrames(embs, d, kCells, rc, m, k, refine)
       graft.Q.fileSized(f.cents).write.mode("overwrite").parquet(s"$dir/cents")
       graft.Q.fileSized(f.cb).write.mode("overwrite").parquet(s"$dir/cb")
@@ -154,15 +154,13 @@ object IvfPq {
       // in executor memory for the JVM lifetime with no further reader.
       f.cents.unpersist(false)
       f.resid.unpersist(false)
-      java.lang.Boolean.TRUE
-    })
+      dir
+    }
     searchIndexD(embs, d,
       graft.Q.readStagedParquet(spark, s"$dir/cents"),
       graft.Q.readStagedParquet(spark, s"$dir/cb"),
       graft.Q.readStagedParquet(spark, s"$dir/codes"), nq, qp, m, shortlist, topK)
   }
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** The SEARCH half against a prebuilt (cents, cb, codes) index: the
     * nq lowest-id vectors as queries, their own qp-cell coarse

@@ -124,21 +124,19 @@ object PqIndex {
     // Dimension probe memoized under the staged key (a small Spark job
     // otherwise paid per WARM call — r12; the dir folds in the corpus
     // fingerprint, so a refresh re-probes with the rebuild).
-    val d = graft.Q.sessionMemo(spark, "pqDim|" + dir)(
+    val d = graft.Q.once(spark, "pqDim|" + dir)(
       Integer.valueOf(embeddingDim(embs, m))).intValue()
-    staged.computeIfAbsent(dir, { _ =>
+    graft.Q.once(dir) {
       val cb = trainCodebooksD(embs, m, k, rounds, d)
       graft.Q.fileSized(cb).write.mode("overwrite").parquet(s"$dir/cb")
       graft.Q.fileSized(encodeD(graft.Q.spreadBy(embs, "vec_id"),
           spark.read.parquet(s"$dir/cb"), m, d))
         .write.mode("overwrite").parquet(s"$dir/codes")
-      java.lang.Boolean.TRUE
-    })
+      dir
+    }
     searchIndexD(embs, d, graft.Q.readStagedParquet(spark, s"$dir/cb"),
       graft.Q.readStagedParquet(spark, s"$dir/codes"), nq, m, shortlist, topK)
   }
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** The search half against a prebuilt (cb, codes) flat-PQ index. */
   def searchIndex(embs: DataFrame, cb: DataFrame, codes: DataFrame,

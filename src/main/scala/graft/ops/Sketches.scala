@@ -217,17 +217,13 @@ object Sketches {
     val spark = docs.sparkSession
     val safe = tag.replaceAll("[^A-Za-z0-9]", "_")
     val dir = graft.Q.jvmStageRoot("graft_shingles") + s"/${safe}_n$shingleN"
-    stagedShingles.computeIfAbsent(dir, { _ =>
+    graft.Q.once(dir) {
       graft.Q.fileSized(hashedShingles(docs, shingleN))
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
+      dir
+    }
     graft.Q.readStagedParquet(spark, dir)
   }
-  private val stagedShingles =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private val stagedLshBase =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** docs(doc_id, text) → (doc_id, sig array<long>).
     * Shingle strings are hashed once (xxhash64 mod P); the k-permutation
@@ -462,7 +458,7 @@ object Sketches {
         val safe = t.replaceAll("[^A-Za-z0-9]", "_")
         val dir = graft.Q.jvmStageRoot("graft_lshbase") + s"/" +
           s"${safe}_b${nbits}_t${tables}_p$probe"
-      stagedLshBase.computeIfAbsent(dir, { _ =>
+        graft.Q.once(dir) {
           // Deliberately NOT fileSized (r17 negative result): this
           // relation feeds a CPU-heavy self-JOIN (pair explosion +
           // cosine) whose parallelism comes from the SCAN — the build's
@@ -472,8 +468,8 @@ object Sketches {
           // the build session's shuffle parallelism: cluster-sized on a
           // cluster, 32 locally.
           buildBase.write.mode("overwrite").parquet(dir)
-          java.lang.Boolean.TRUE
-        })
+          dir
+        }
         graft.Q.readStagedParquet(embs.sparkSession, dir)
       case None => buildBase.transform(graft.Q.sketchPersist)
     }

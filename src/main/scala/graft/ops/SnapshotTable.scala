@@ -50,16 +50,14 @@ object SnapshotTable {
   /** Build (once per JVM × corpus) the versioned store; returns its
     * root. Keyed like every staged layout: pid@host (no cross-process
     * races) × corpus fingerprint (a driver fixture refresh re-stages
-    * rather than serving a stale snapshot — the ADVICE r9 lesson), and
-    * memoized per session so concurrent query constructions stage once.
+    * rather than serving a stale snapshot — the ADVICE r9 lesson). The
+    * root is on-disk state, so it stages through the JVM scope of
+    * [[graft.Q.once]]: concurrent query constructions stage once.
     */
   def stage(s: SparkSession, d: String): String = {
     val tag = graft.Q.corpusTag(s, d, "orders").replaceAll("[^A-Za-z0-9]", "_")
-    graft.Q.sessionMemo(s, "snaptable|" + tag) {
-      val root = graft.Q.jvmStageRoot("graft_snap") + s"/$tag"
-      stageInto(s, d, root)
-      root
-    }
+    val root = graft.Q.jvmStageRoot("graft_snap") + s"/$tag"
+    graft.Q.once(root) { stageInto(s, d, root); root }
   }
 
   /** The staging body against an explicit root — separated so specs can

@@ -23,18 +23,15 @@ object Extra11 {
     * fingerprint keys a rebuild if the driver refreshes documents
     * mid-process (the ADVICE-r9 staleness rule for all staged state).
     */
-  private val stagedMedia =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private def mediaDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val dir = Q.stageDir("graft_media", d,
       "corpus_" + Q.corpusFingerprint(s, s"$d/documents.parquet"))
-    stagedMedia.computeIfAbsent(dir, { _ =>
+    Q.once(dir) {
       val n = Q.parquetRowCount(s, s"$d/documents.parquet").toInt
       graft.Q.fileSized(Multimodal.synthesize(s, n))
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
+      dir
+    }
   }
 
   val defs: Map[String, Q] = Map(

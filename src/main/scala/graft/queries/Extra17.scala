@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Extra17 {
 
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** One .bin object per synthesized media row plus a non-matching
     * manifest decoy — the object-store layout a crawler delivers.
     * Executors write the files (local-FS staging; on a cluster the dir
@@ -26,7 +23,7 @@ object Extra17 {
   private def mediaFilesDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val dir = Q.stageDir("graft_mediafiles", d,
       "corpus_" + Q.corpusFingerprint(s, s"$d/documents.parquet"))
-    staged.computeIfAbsent(dir, { _ =>
+    Q.once(dir) {
       val n = Q.parquetRowCount(s, s"$d/documents.parquet").toInt
       val p = java.nio.file.Paths.get(dir)
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
@@ -45,9 +42,8 @@ object Extra17 {
         }
       java.nio.file.Files.write(p.resolve("_manifest.txt"),
         "not media".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.lang.Boolean.TRUE
-    })
-    dir
+      dir
+    }
   }
 
   val defs: Map[String, Q] = Map(
@@ -135,14 +131,14 @@ object Extra17 {
       val fragDir = Q.stageDir("graft_compact", d,
         "frag_" + Q.corpusFingerprint(s, s"$d/documents.parquet"))
       val compactDir = fragDir + "_out"
-      staged.computeIfAbsent(compactDir, { _ =>
+      Q.once(compactDir) {
         T.documents(s, d).repartition(64)
           .write.mode("overwrite").parquet(fragDir)
         s.read.parquet(fragDir)
           .repartitionByRange(4, col("doc_id"))
           .write.mode("overwrite").parquet(compactDir)
-        java.lang.Boolean.TRUE
-      })
+        compactDir
+      }
       val nFiles = new java.io.File(compactDir).listFiles()
         .count(f => f.getName.endsWith(".parquet"))
       // the per-file summary is a ≤4-row frame: the unpartitioned
@@ -185,11 +181,11 @@ object Extra17 {
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       val dir = Q.stageDir("graft_dpp", d,
         "hive_" + Q.corpusFingerprint(s, s"$d/orders.parquet"))
-      staged.computeIfAbsent(dir, { _ =>
+      Q.once(dir) {
         T.orders(s, d).select("o_custkey", "o_totalprice", "o_orderpriority")
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(dir)
-        java.lang.Boolean.TRUE
-      })
+        dir
+      }
       val dim = T.orders(s, d)
         .filter(col("o_custkey") <= 5)
         .select(col("o_orderpriority").as("prio")).distinct()

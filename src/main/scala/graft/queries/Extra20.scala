@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.{Q, Tables => T}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -72,8 +70,6 @@ object Extra20 {
       .groupBy("p1", "p2")
       .agg(count(lit(1)).as("n"))
 
-  private val staged = new ConcurrentHashMap[String, java.lang.Boolean]()
-
   val defs: Map[String, Q] = Map(
 
     // MALFORMED-RECORD CSV SCAN — a deterministically dirtied feed
@@ -98,7 +94,7 @@ object Extra20 {
         |FROM read_parquet('{sfDir}/orders.parquet')""".stripMargin) { (s, d) =>
       val dir = Q.stageDir("graft_dirty", d,
         "csv_" + Q.corpusFingerprint(s, s"$d/orders.parquet"))
-      staged.computeIfAbsent(dir, { _ =>
+      Q.once(dir) {
         // one CSV line per order; every 13th gets an unparseable
         // custkey — written as plain text so the dirt survives exactly
         // as authored (the csv writer would quote/escape it away)
@@ -112,8 +108,8 @@ object Extra20 {
               .otherwise(col("o_custkey").cast("string")),
             col("o_orderpriority")).as("value"))
           .write.mode("overwrite").text(dir)
-        java.lang.Boolean.TRUE
-      })
+        dir
+      }
       val schema = StructType(Seq(
         StructField("k", LongType), StructField("ck", LongType),
         StructField("prio", StringType),

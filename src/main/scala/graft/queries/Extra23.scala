@@ -738,12 +738,13 @@ object Extra23 {
     * (persisted BEFORE any consumer's CacheScope opens, so pipeline
     * arenas never release it), re-joined by every traversal with zero
     * per-round planning and zero edge movement. A fixture refresh
-    * changes the fingerprint and re-stages; the superseded RDD ages
-    * out with the session (the sessionMemo weak-key contract).
+    * changes the fingerprint and re-stages; the superseded RDD stays
+    * in the session scope of [[graft.Q.once]], which is weak-keyed on
+    * the session instance, so a new session never reuses it.
     */
   private[graft] def stagedGraphRdd(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.rdd.RDD[(Long, (Long, Long))], Seq[Long]) =
-    graft.Q.sessionMemo(s, "graphrdd|" + stagedGraphEdges(s, d)) {
+    graft.Q.once(s, "graphrdd|" + stagedGraphEdges(s, d)) {
       val n = s.conf.get("spark.sql.shuffle.partitions").toInt
       val rdd = s.table(stagedGraphEdges(s, d))
         .select(col("u"), col("v"), col("w")).rdd

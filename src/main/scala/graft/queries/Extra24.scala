@@ -94,7 +94,7 @@ object Extra24 {
     */
   private[graft] def stagedLpaLabels(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.rdd.RDD[(Long, Long)] =
-    graft.Q.sessionMemo(s, "lpa3|" + Extra23.stagedGraphEdges(s, d)) {
+    graft.Q.once(s, "lpa3|" + Extra23.stagedGraphEdges(s, d)) {
       val (erdd, _) = Extra23.stagedGraphRdd(s, d)
       val lab = graft.ops.Lpa.lpaRdd(erdd, rounds = 3)
       graft.ops.CacheScope.pinStaged(lab)
@@ -138,8 +138,9 @@ object Extra24 {
     * an explicit `spark.graft.graph.broadcastLabels` still wins, but
     * the DEFAULT now follows the measured |V| bound — broadcast while
     * nodeBound ≤ `spark.graft.graph.broadcastLabels.maxNodes` (default
-    * 10⁸: ~1.6 GB of built relation at 16 B/row, inside the 8 GB /
-    * 512M-row broadcast hard cap with margin), shuffled join past it,
+    * 10⁷: a collected (long, long) HashedRelation costs far more than
+    * its 16 B/row payload — at 10⁸ rows several GB of driver heap, well
+    * before the 8 GB / 512M-row broadcast hard cap), shuffled join past it,
     * so node-sized broadcasts turn themselves off before they OOM the
     * driver at 10⁹ nodes. Callers without a cheap bound (computed
     * assignments of unknown size) keep the broadcast default — the
@@ -150,7 +151,7 @@ object Extra24 {
     s.conf.getOption("spark.graft.graph.broadcastLabels") match {
       case Some(v) => v.toBoolean
       case None => nodeBound.forall(_ <= s.conf
-        .get("spark.graft.graph.broadcastLabels.maxNodes", "100000000").toLong)
+        .get("spark.graft.graph.broadcastLabels.maxNodes", "10000000").toLong)
     }
 
   /** Node count of the staged graph — one cheap count of the persisted
@@ -161,7 +162,7 @@ object Extra24 {
     */
   private[graft] def stagedNodeCount(s: org.apache.spark.sql.SparkSession,
       d: String): Long =
-    graft.Q.sessionMemo(s, "nodecount|" + Extra23.stagedGraphEdges(s, d))(
+    graft.Q.once(s, "nodecount|" + Extra23.stagedGraphEdges(s, d))(
       java.lang.Long.valueOf(stagedLpaLabels(s, d).count())).longValue()
 
   private[graft] def modularityOf(e: DataFrame, lab: DataFrame,

@@ -116,15 +116,15 @@ object Extra9 {
         val safe = t.replaceAll("[^A-Za-z0-9]", "_")
         val dir = graft.Q.jvmStageRoot("graft_docgrams") + s"/" +
           s"${safe}_pf$prefilterDf"
-        stagedDocGrams.computeIfAbsent(dir, { _ =>
+        graft.Q.once(dir) {
           // Deliberately NOT fileSized (r17, the lshbase/ivf-cells
           // negative-result class): the probe/index self-join explodes
           // this relation map-side — scan parallelism is the candidate
           // stage's parallelism, and the build aggregate's partitioning
           // in the file layout is what provides it.
           docGramsFresh.write.mode("overwrite").parquet(dir)
-          java.lang.Boolean.TRUE
-        })
+          dir
+        }
         graft.Q.readStagedParquet(spark, dir)
       case None => docGramsFresh.transform(graft.Q.sketchPersist)
     }
@@ -145,9 +145,6 @@ object Extra9 {
       .filter(col("inter_n") * 1000 >= col("a_n") * 800)
       .orderBy("id1", "id2")
   }
-
-  private val stagedDocGrams =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   val defs: Map[String, Q] = Map(
 

@@ -39,14 +39,23 @@ class CutModeSpec extends AnyFunSuite with BeforeAndAfterAll {
       out
     }
     val local = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_test").toString
-    spark.conf.set("spark.graft.checkpoint.dir", dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_test")
+    spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
     try {
       val reliable = run()
       assert(reliable == local)
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      val walk = java.nio.file.Files.walk(dir)
+      val wrote = try walk.filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      finally walk.close()
       assert(wrote > 0, s"reliable mode wrote no checkpoint files under $dir")
-    } finally spark.conf.unset("spark.graft.checkpoint.dir")
+      // SparkContext puts checkpoints in `<dir>/<uuid>`; every round's
+      // cut must reuse that one directory, not mint a fresh uuid.
+      val kids = java.nio.file.Files.list(dir)
+      val nKids = try kids.count() finally kids.close()
+      assert(nKids == 1, s"expected one checkpoint directory under $dir, found $nKids")
+    } finally {
+      spark.conf.unset("spark.graft.checkpoint.dir")
+      org.apache.hadoop.fs.FileUtil.fullyDelete(dir.toFile)
+    }
   }
 }

@@ -478,4 +478,57 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(obj1 <= BigDecimal(seedObj) + BigDecimal("0.001"),
       s"refined objective $obj1 must be <= seed objective $seedObj")
   }
+
+  test("Q.once: nested builds of same-bin keys return both values (JVM and session)") {
+    // "Aa" and "BB" share a String hashCode, so they land in one hash
+    // bin: a builder run INSIDE ConcurrentHashMap.computeIfAbsent that
+    // computes the other key throws "Recursive update" every time.
+    assert("Aa".hashCode == "BB".hashCode)
+    val jvm = Q.once("Aa")(Q.once("BB")("bb") + "/aa")
+    assert(jvm == "bb/aa" && Q.once("BB")("x") == "bb")
+    val fresh = spark.newSession()
+    val ses = Q.once(fresh, "Aa")(Q.once(fresh, "BB")("bb") + "/aa")
+    assert(ses == "bb/aa" && Q.once(fresh, "BB")("x") == "bb")
+  }
+
+  test("Q.once: 8 concurrent callers of one key build exactly once") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[AnyRef] {
+          def call(): AnyRef = {
+            start.await()
+            Q.once("opsspec|concurrent") {
+              builds.incrementAndGet()
+              Thread.sleep(100) // hold the build open while the others arrive
+              new Object
+            }
+          }
+        })
+      }
+      start.countDown()
+      val got = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get == 1)
+      assert(got.forall(_ eq got.head))
+    } finally pool.shutdownNow()
+  }
+
+  test("Q.once: a build that throws is not cached and is retried") {
+    val e = intercept[IllegalStateException] {
+      Q.once[String]("opsspec|flaky")(throw new IllegalStateException("boom"))
+    }
+    assert(e.getMessage == "boom")
+    assert(Q.once("opsspec|flaky")("built") == "built")
+    assert(Q.once("opsspec|flaky")("rebuilt") == "built")
+  }
+
+  test("Q.once: a new session does not see another session's value") {
+    val first = spark.newSession()
+    val second = first.newSession()
+    assert(Q.once(first, "opsspec|scoped")("first") == "first")
+    assert(Q.once(second, "opsspec|scoped")("second") == "second")
+    assert(Q.once(first, "opsspec|scoped")("again") == "first")
+  }
 }

@@ -701,20 +701,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // graph would OOM the driver) the attach degrades to a shuffled
     // join. Pin both branches on graph_modularity; the explicit
     // broadcastLabels conf still overrides (louvain/LPA share the gate).
-    def planWith(maxNodes: String): String = {
-      spark.conf.set("spark.graft.graph.broadcastLabels.maxNodes", maxNodes)
+    def planWith(maxNodes: Option[String]): String = {
+      maxNodes.foreach(spark.conf.set("spark.graft.graph.broadcastLabels.maxNodes", _))
       try planOf("graph_modularity")
       finally spark.conf.unset("spark.graft.graph.broadcastLabels.maxNodes")
     }
-    // default bound (fixture |V| far below it): label attach broadcasts
-    assert(planWith("100000000").contains("BroadcastHashJoin"))
+    // the real default bound (conf unset; fixture |V| far below it):
+    // label attach broadcasts
+    assert(planWith(None).contains("BroadcastHashJoin"))
     // bound forced below the fixture |V|: the gate plans NO label
     // broadcast — the attach is a shuffled join in the initial plan
     // (slower, never driver-fatal). AQE may still locally convert the
     // tiny fixture join back to broadcast at runtime, which is fine —
     // the gate's job is to stop PLANNING a driver-fatal broadcast, so
     // the pin reads the pre-runtime plan.
-    val tight = planWith("1")
+    val tight = planWith(Some("1"))
     val cut = tight.indexOf("== Initial Plan ==")
     assert(cut >= 0, tight)
     val initial = tight.substring(cut)
