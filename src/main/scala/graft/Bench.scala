@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** Quiet-box cost of the ambient probe (seconds) — the fixed synthetic
     * job in [[Bench.probeOnce]] measured on this 32-cpu box with nothing
-    * else running (min of 20 back-to-back samples after JIT warm-up; the
-    * DriftProbe `norm` mode re-measures it). Normalization rescales a
+    * else running (min of 20 back-to-back samples after JIT warm-up,
+    * measured with DriftProbe's `norm` mode). Normalization rescales a
     * query's sample by min(1, PROBE_REF / probe-at-that-moment): a probe
     * reading 2× PROBE_REF means the host was ~2× contended during that
     * query's window, so the sample deflates toward its quiet-box cost;
@@ -34,27 +32,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // r17 (guide §1/§4 — measured, see OPTIMIZATION_r17.md): the
-      // whole-stage-codegen class cache defaults to 100 entries, and a
-      // 278-query board compiles thousands of generated classes per
-      // pass — by the time a query's pass 2 runs, its classes have been
-      // evicted, so every pass re-Janino-compiles AND re-JITs from the
-      // interpreter (StageProbe: the same tf stage costs 14.3 s of CPU
-      // on first execution and 0.6 s once compiled). Raising the cache
-      // lets pass 2 (the min the bench reports) run the already-JITted
-      // classes — the same fix any long-lived multi-query service
-      // applies; it is per-JVM state, equally valid on cluster
-      // executors, not a local[32] artifact. Static conf: must be set
-      // before session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session on sf0.001 (cheap) across operator families —
     // scheduler, whole-stage codegen, native kernel JIT (C2), parquet
@@ -90,13 +69,12 @@ object Bench {
     // median cannot localize which queries ran loud, so total_norm
     // over-corrected 4×. Probe cost ≈ 55 ms quiet → ~30 s overhead on a
     // 272-query 2-pass board, outside every timed query window.
-    val cpusInt = cpus.toInt
     def probeOnce(): Double = {
       import org.apache.spark.sql.functions.{sum, xxhash64, pmod, col, lit}
       val t0 = System.nanoTime()
       // pmod before the sum keeps the aggregate inside int64 under ANSI
       // mode (6M × <2²⁰ « 2⁶³); the hash is still computed per row.
-      spark.range(0, 6000000L, 1, cpusInt)
+      spark.range(0, 6000000L, 1, cpus)
         .select(sum(pmod(xxhash64(col("id")), lit(1048576L)))).head()
       (System.nanoTime() - t0) / 1e9
     }

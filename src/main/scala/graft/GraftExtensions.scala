@@ -9,7 +9,7 @@ import graft.functions.CosineSimilarity
 /** Public extension wiring (SURVEY §4): inject the engine's native
   * functions and planner strategies at session build time via
   * `spark.sql.extensions=graft.GraftExtensions` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `GraftSession.builder(n).withExtensions(new GraftExtensions)`.
   * (`native.top_k_per_group` also attaches the strategy lazily for
   * sessions built without extensions.)
   */

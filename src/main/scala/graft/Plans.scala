@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for representative queries → PLANS.md,
   * the physical-plan evidence behind the scale-design claims (pushdown,
@@ -130,12 +129,7 @@ object Plans {
     // Extra args = ad-hoc mode: print those queries' executed plans to
     // stdout instead of regenerating PLANS.md.
     val adhoc = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (adhoc.nonEmpty) {
       adhoc.foreach { name =>

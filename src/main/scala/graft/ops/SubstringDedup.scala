@@ -46,7 +46,7 @@ object SubstringDedup {
     *    CAN split (the one-row build side is duplicated per split).
     *    Costs a second shuffle of the gram relation; buys a flat
     *    profile under skew. OpsSpec pins both paths equivalent on
-    *    randomized input; PerfProbe measures the skew behavior.
+    *    randomized input.
     */
   def windowDupStats(docs: DataFrame, k: Int = 10,
       twoPhaseFirst: Boolean = false): DataFrame = {

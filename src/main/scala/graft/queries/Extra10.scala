@@ -317,9 +317,7 @@ object Extra10 {
   )
 
   /** The agg_minhash_merge pipeline over an explicit (doc_id, source,
-    * text) frame — the declared query binds the fixture table; PerfProbe
-    * binds scaled/perturbed corpora so scaling exponents are measured on
-    * the EXACT declared shape, not a probe-local copy.
+    * text) frame; the declared query binds the fixture table.
     *
     * Word convention: BOTH engines shingle the raw space-split (empty
     * tokens kept — the dedup_minhash convention; the oracle's

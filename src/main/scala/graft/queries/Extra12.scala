@@ -512,9 +512,7 @@ object Extra12 {
   }
 
   /** The sql_q21 pipeline over explicit fact frames — the declared query
-    * binds the fixtures; PerfProbe binds offset-replicated facts so the
-    * rewrite's scaling exponent is measured on the EXACT declared shape
-    * (the minhashMergeOf convention).
+    * binds the fixtures (lineitem merge-hinted).
     *
     * Everything derives from ONE per-(order, supplier) rollup — a
     * double countDistinct would instead Expand the fact 2× before its

@@ -197,8 +197,8 @@ object Extra15 {
     // column) measured 0.47 → 0.56 s at sf0.1 — the second pruned scan
     // is CHEAPER here than persisting the rollup, because the red
     // semi-filter drops ~87% of lineitem before any shuffle. At 100 TB
-    // the trade flips with scan cost — the rewrite lives in Q14Probe
-    // for when it's needed; the orderkey-bucketed layout is irrelevant
+    // the trade flips with scan cost — revisit the rewrite there; the
+    // orderkey-bucketed layout is irrelevant
     // to this query (its joins are partkey-grain).
     "sql_q20" -> Q(
       """WITH red AS (

@@ -385,10 +385,7 @@ object Extra16 {
     }
   )
 
-  /** The text_bpe_pairs pipeline over an explicit text frame — shared
-    * with PerfProbe's vocab-compression scaling probe, which must run
-    * the EXACT declared shape, not a copy.
-    */
+  /** The text_bpe_pairs pipeline over an explicit text frame. */
   private[graft] def bpePairsOf(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     docs

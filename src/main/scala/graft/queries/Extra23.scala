@@ -381,18 +381,11 @@ object Extra23 {
       // a 10-element heap per query while streaming, so only 8×10 rows
       // ever reach the rank window — the scale-safe form the rest of
       // the board uses; same total order (s desc, doc_id), same rows.
-      // Conf-gated (the SubstringDedup.twoPhaseFirst discipline) so
-      // the single-window local form stays A/B-able: DriftProbe
-      // measured heap ≈ window locally (within jitter), so the
-      // scale-safe heap is the default — there is no local price to
-      // pay for the form that survives 100× corpus.
-      val lexSide = s.conf.get("spark.graft.hybrid.lexCut", "heap") match {
-        case "window" => lex
-        case _ =>
-          val gn2 = org.apache.spark.sql.graft.native
-          gn2.top_k_per_group(lex, Seq("q_id"),
-            Seq(col("s").desc, col("doc_id").asc), 10)
-      }
+      // DriftProbe measured heap ≈ window locally (within jitter), so
+      // there is no local price to pay for the form that survives 100×
+      // corpus.
+      val lexSide = org.apache.spark.sql.graft.native.top_k_per_group(
+        lex, Seq("q_id"), Seq(col("s").desc, col("doc_id").asc), 10)
       // ONE fused rank window for BOTH lists (VERDICT r15 #3): tag the
       // dense (already heap-cut to topK by searchIndex) and lexical
       // (heap-cut above) candidate lists, union, and assign ranks in a

@@ -65,7 +65,7 @@ object Extra8 {
         |FROM g0 LEFT JOIN agg ON g0.doc_id = agg.doc_id
         |ORDER BY 1""".stripMargin) { (s, d) =>
       // Pipeline lives in ops/SubstringDedup (randomized brute-force
-      // equivalence in OpsSpec, scaling probe in PerfProbe).
+      // equivalence in OpsSpec).
       graft.ops.SubstringDedup
         .windowDupStats(T.documents(s, d).select("doc_id", "text"), k = 10)
         .orderBy("doc_id")

@@ -56,9 +56,8 @@ object Extra9 {
       stagedTag)
 
   /** Same pipeline over an explicit (doc_id, text) frame — the declared
-    * query binds the fixture table; PerfProbe binds scaled/perturbed
-    * corpora so the scaling exponents are measured on the EXACT declared
-    * shape, not a probe-local copy.
+    * query binds the fixture table; SketchesSpec binds its own corpus to
+    * compare the fresh and staged forms of the EXACT declared shape.
     */
   private[graft] def containmentOf(docsRaw: org.apache.spark.sql.DataFrame,
       prefilterDf: Boolean,

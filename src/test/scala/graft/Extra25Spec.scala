@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Extra25Spec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 

@@ -17,12 +17,7 @@ import graft.ops.IvfPq
   */
 class IvfPqSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(8).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 

@@ -26,12 +26,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val tmp = Files.createTempDirectory("graft-layout").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 

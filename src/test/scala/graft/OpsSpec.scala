@@ -14,12 +14,7 @@ import graft.ops.{AsOfJoin, Multimodal}
 /** Custom Expression / Aggregator / as-of join / multimodal pipeline. */
 class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 

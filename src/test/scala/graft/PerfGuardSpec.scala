@@ -24,12 +24,7 @@ class PerfGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val enabled = sys.env.get("GRAFT_PERF_SPECS").contains("1")
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[16]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(16).getOrCreate()
 
   override def afterAll(): Unit = if (enabled) spark.stop()
 
@@ -85,7 +80,7 @@ class PerfGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val nCorpus = 16000
     val dim = 64
-    val (corpusDf, _) = graft.tools.LshTauProbe.plantedCorpus(spark, nCorpus, 0, dim)
+    val (corpusDf, _) = LshFixtures.plantedCorpus(spark, nCorpus, 0, dim)
     val corpus = corpusDf.persist()
     corpus.count()
     // The b12 staged configuration — AdmitRateProbe's fastest form.

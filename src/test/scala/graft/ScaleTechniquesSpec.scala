@@ -17,12 +17,8 @@ class ScaleTechniquesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val warehouse = Files.createTempDirectory("graft-wh").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()

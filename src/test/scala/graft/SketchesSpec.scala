@@ -13,12 +13,7 @@ import graft.ops.Sketches
   */
 class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 
@@ -332,7 +327,8 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // would make any two probe sets overlap by pigeonhole — recall
     // guaranteed structurally instead of measured.
     // If a weaker notch fails while the declared params pass, the
-    // fixtures moved to the edge; retune via tools/AnnSweep.
+    // fixtures moved to the edge: re-measure the recall of each notch
+    // on the new fixtures and retune the declared params.
     type Pairs = Array[(Long, Long, Double)]
     def collectPairs(df: org.apache.spark.sql.DataFrame): Pairs =
       df.select(col("id1"), col("id2"), col("sim").cast("double"))
@@ -543,7 +539,7 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Every other LSH gate runs at the fixture-forced τ=0.44 design
     // point; lshParamsFor's claim that the table law is CONSERVATIVE at
     // production τ≈0.95 was analytic only (VERDICT r12 #3). This pins
-    // the tools/LshTauProbe measurement on its seeded planted corpora
+    // the r13 measurement on LshFixtures' seeded planted corpora
     // (deterministic pipelines — exact counts): 40 replicas rotated to
     // cosine ∈ [0.952, 0.985] over gaussian base vectors, at the two
     // law bit depths. Measured edges: recall 40/40 from T=2 at BOTH
@@ -562,7 +558,7 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       (truth.toSet & got).size
     }
-    val (e2k, t2k) = graft.tools.LshTauProbe.plantedCorpus(spark, 1960, 40)
+    val (e2k, t2k) = LshFixtures.plantedCorpus(spark, 1960, 40)
     val c2k = e2k.persist()
     val declared = Sketches.lshParamsFor(2000, Sketches.LshDemand.Threshold)
     assert(declared.nbits == 6 && declared.tables == 16, declared)
@@ -570,14 +566,16 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(recall(c2k, t2k, 6, declared.tables - 2) == 40, "notch missed")
     assert(recall(c2k, t2k, 6, 2) == 40, "measured T=2 edge regressed")
     assert(recall(c2k, t2k, 6, 1) < 40,
-      "T=1 unexpectedly recall-complete — re-run tools/LshTauProbe")
+      "T=1 unexpectedly recall-complete — the measured edge moved; " +
+        "re-measure recall per table count")
     c2k.unpersist()
-    val (e16k, t16k) = graft.tools.LshTauProbe.plantedCorpus(spark, 15960, 40)
+    val (e16k, t16k) = LshFixtures.plantedCorpus(spark, 15960, 40)
     val c16k = e16k.persist()
     assert(Sketches.lshBitsFor(16000) == 9)
     assert(recall(c16k, t16k, 9, 2) == 40, "measured T=2 edge regressed")
     assert(recall(c16k, t16k, 9, 1) < 40,
-      "T=1 unexpectedly recall-complete — re-run tools/LshTauProbe")
+      "T=1 unexpectedly recall-complete — the measured edge moved; " +
+        "re-measure recall per table count")
     val law = Sketches.lshParamsFor(16000, Sketches.LshDemand.Threshold)
     assert(law.nbits == 9 && law.tables >= 8 * 2,
       s"law tables lost the >=8x margin over the measured edge: $law")

@@ -16,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(2).getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 
