@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalFs
+
 /** The one session builder: every main and every spec in this repo
   * starts its session here, so a conf the engine depends on is set in
   * one place. Callers chain their own extras (warehouse dir, extensions)
@@ -27,4 +29,6 @@ object GraftSession {
       // executors, not a local[32] artifact. Static conf: must be set
       // before session creation.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // The `file` scheme without forked chmod/readlink/ls (see LocalFs).
+      .config(LocalFs.hadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
 }

@@ -1,7 +1,10 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Config-driven pipeline assembly — the nf2pq operating model (SURVEY
   * §1.1: a static TOML-style `nf2pq.conf` names listeners, output dir,
@@ -91,6 +94,18 @@ object FlowApp {
     }.reduce(_ unionByName _)
   }
 
+  /** Collector mode: templates outlive the micro-batch (see
+    * FlowPipeline.TemplateStore), scoped by the listener endpoints as the
+    * source itself reads them (`UdpFlowSource.endpointKey`: its defaults
+    * and its case-insensitive option keys), so two FlowApps on different
+    * endpoints keep separate template worlds.
+    */
+  def templateScope(config: Map[String, Map[String, String]]): String =
+    "flowapp:" + config.collect {
+      case (name, kv) if name.startsWith("listener.") || name == "listener" =>
+        UdpFlowSource.endpointKey(new CaseInsensitiveStringMap(kv.asJava))
+    }.toSeq.sorted.mkString(",")
+
   private def req(kv: Map[String, String], section: String, key: String): String =
     kv.getOrElse(key,
       throw new IllegalArgumentException(s"[$section] needs $key"))
@@ -116,17 +131,9 @@ object FlowApp {
       config: Map[String, Map[String, String]]): Seq[StreamingQuery] = {
     import org.apache.spark.sql.functions.{col, date_format}
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    // Collector mode: templates outlive the micro-batch (see
-    // FlowPipeline.TemplateStore) — scoped by the listener ENDPOINTS
-    // (host:port with the SAME defaults UdpFlowSource applies —
-    // UdpFlowSource.scala:123) so two FlowApps on different endpoints
-    // keep separate template worlds and a defaulted option cannot make
-    // two distinct endpoints collide on one scope.
-    val scope = "flowapp:" + config.collect {
-      case (name, kv) if name.startsWith("listener.") || name == "listener" =>
-        kv.getOrElse("host", "0.0.0.0") + ":" + kv.getOrElse("port", "2055")
-    }.toSeq.sorted.mkString(",")
-    val flows = FlowPipeline.decode(packetStream(spark, config), Some(scope))
+    LocalFs.install(spark)
+    val flows = FlowPipeline.decode(packetStream(spark, config),
+      Some(templateScope(config)))
     (config.get("parquet"), config.get("clickhouse")) match {
       case (Some(p), Some(c)) =>
         val dir = req(p, "parquet", "dir")

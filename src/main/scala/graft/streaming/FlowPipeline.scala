@@ -24,7 +24,11 @@ object FlowPipeline {
     * lifetime; the Spark-native equivalent is this per-EXECUTOR store
     * (exporters are sticky to a listener/partition, so an exporter's
     * template and data packets decode on the same executor — the same
-    * co-location the reference's per-listener threads assume).
+    * co-location the reference's per-listener threads assume). The
+    * `udp-flows` source does not provide that stickiness: it splits a
+    * batch by position, so a template and the data it describes can
+    * decode in two concurrent tasks and the data miss the template
+    * (ROADMAP direction 1).
     *
     * Scoped by caller-chosen name so concurrent pipelines/tests cannot
     * cross-pollinate. Honest recovery caveat (shared with the
@@ -100,21 +104,6 @@ object FlowPipeline {
     def clear(scope: String): Unit = { scopes.remove(scope); () }
   }
 
-  /** Decode raw packet rows (recv_ts, peer, payload) into flow records.
-    *
-    * Template state lives per executor-partition (the decoder threads an
-    * immutable map through the packets of one partition, in arrival
-    * order). Exporters are sticky to a listener/partition in deployment,
-    * so templates and their data records co-locate — same assumption the
-    * reference's per-listener threads make. mapPartitions is justified
-    * here (SURVEY §2.10: imperative per-partition logic with local state).
-    *
-    * `templateScope`: None (default) keeps the stage PURE — template
-    * state starts empty every batch/run, results are a function of the
-    * input alone (what the batch/replay tests rely on). Some(scope)
-    * additionally seeds from and writes back to [[TemplateStore]], the
-    * streaming-collector mode where templates outlive the micro-batch.
-    */
   /** One decode pass extracting a view of each packet's DecodeResult —
     * shared by [[decode]] and [[decodeOptions]] so the template-threading
     * logic cannot drift between them. (Two *sinks* on the same packets
@@ -148,6 +137,21 @@ object FlowPipeline {
   def decode(packets: DataFrame): Dataset[FlowRecord] =
     decode(packets, templateScope = None)
 
+  /** Decode raw packet rows (recv_ts, peer, payload) into flow records.
+    *
+    * Template state lives per executor-partition (the decoder threads an
+    * immutable map through the packets of one partition, in arrival
+    * order). Exporters are sticky to a listener/partition in deployment,
+    * so templates and their data records co-locate — same assumption the
+    * reference's per-listener threads make. mapPartitions is justified
+    * here (SURVEY §2.10: imperative per-partition logic with local state).
+    *
+    * `templateScope`: None (default) keeps the stage PURE — template
+    * state starts empty every batch/run, results are a function of the
+    * input alone (what the batch/replay tests rely on). Some(scope)
+    * additionally seeds from and writes back to [[TemplateStore]], the
+    * streaming-collector mode where templates outlive the micro-batch.
+    */
   def decode(packets: DataFrame,
       templateScope: Option[String]): Dataset[FlowRecord] =
     decodeStage(packets, templateScope)(_.records)(Encoders.product[FlowRecord])
@@ -227,7 +231,8 @@ object FlowPipeline {
     * exactly-once file commits.
     */
   def startParquetSink(flows: Dataset[FlowRecord], outDir: String,
-      checkpointDir: String, interval: String = "60 seconds"): StreamingQuery =
+      checkpointDir: String, interval: String = "60 seconds"): StreamingQuery = {
+    LocalFs.install(flows.sparkSession)
     flows.toDF()
       .withColumn("date", date_format(col("start_ts"), "yyyy-MM-dd"))
       .withColumn("hour", date_format(col("start_ts"), "HH"))
@@ -239,6 +244,7 @@ object FlowPipeline {
       .trigger(Trigger.ProcessingTime(interval))
       .outputMode(OutputMode.Append())
       .start()
+  }
 
   /** Batch-sink abstraction used from foreachBatch — the reference's
     * optional ClickHouse insert is one implementation.
@@ -263,13 +269,15 @@ object FlowPipeline {
 
   /** Collect each micro-batch into `sink` (ClickHouse, test buffers, …). */
   def startForeachBatchSink(flows: Dataset[FlowRecord], sink: FlowSink,
-      checkpointDir: String, interval: String = "60 seconds"): StreamingQuery =
+      checkpointDir: String, interval: String = "60 seconds"): StreamingQuery = {
+    LocalFs.install(flows.sparkSession)
     flows.toDF().writeStream
       .foreachBatch((df: DataFrame, id: Long) => sink.write(df, id))
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(interval))
       .outputMode(OutputMode.Append())
       .start()
+  }
 
   /** One packet-level observation feeding the flow cache. */
   final case class PacketObs(flow_key: String, ts: Timestamp, packets: Long, bytes: Long)

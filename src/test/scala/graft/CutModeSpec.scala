@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the conf-gated lineage-cut recipe (r17, VERDICT r16 #5/#7):
@@ -12,11 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * must produce identical results on a cut-using pipeline, and the
   * reliable mode must actually write checkpoint state to the directory.
   */
-class CutModeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CutModeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("Q.cut: reliable-checkpoint mode equals localCheckpoint mode") {
     import spark.implicits._
@@ -34,7 +33,7 @@ class CutModeSpec extends AnyFunSuite with BeforeAndAfterAll {
       out
     }
     val local = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_test")
+    val dir = tmpDir("graft_ckpt_test")
     spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
     try {
       val reliable = run()
@@ -50,7 +49,6 @@ class CutModeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(nKids == 1, s"expected one checkpoint directory under $dir, found $nKids")
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
-      org.apache.hadoop.fs.FileUtil.fullyDelete(dir.toFile)
     }
   }
 }

@@ -20,6 +20,14 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
+  test("GraftSession.builder routes the file scheme to LocalFs from the start") {
+    val spark = GraftSession.builder(1).getOrCreate()
+    try {
+      val hc = spark.sparkContext.hadoopConfiguration
+      graft.streaming.LocalFs.hadoopConf.foreach { case (k, v) => assert(hc.get(k) == v, k) }
+    } finally spark.stop()
+  }
+
   test("no source file outside GraftSession.scala calls the raw session builder") {
     // Split so this file does not match its own scan.
     val needle = "SparkSession" + ".builder()"

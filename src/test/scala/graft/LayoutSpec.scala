@@ -9,7 +9,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ZOrder
@@ -22,13 +21,13 @@ import graft.ops.ZOrder
   * file/row-group skipping; measuring it on the footers directly keeps
   * the assertion engine-independent.
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LayoutSpec extends AnyFunSuite with TempDirs {
 
-  private val tmp = Files.createTempDirectory("graft-layout").toString
+  private val tmp = tmpDir("graft-layout").toString
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** Per parquet file: column → (min, max) from footer statistics,
     * merged across the file's row groups (INT64 columns).
@@ -200,7 +199,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deadPid = (4194304 to 4194200 by -1)
       .find(p => !Files.exists(java.nio.file.Paths.get("/proc", p.toString)))
       .get.toString
-    val root = Files.createTempDirectory("graft-reap")
+    val root = tmpDir("graft-reap")
     def mk(parts: String*): java.nio.file.Path = {
       val p = parts.foldLeft(root)(_.resolve(_))
       Files.createDirectories(p)
@@ -262,7 +261,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = "/root/testdata/sf0.001"
     // PRIVATE store — vacuum is destructive and must never touch the
     // shared staged root the declared queries read.
-    val root = Files.createTempDirectory("graft-snapvac").toString + "/t"
+    val root = tmpDir("graft-snapvac").toString + "/t"
     SnapshotTable.stageInto(spark, d, root)
     val orders = Tables.orders(spark, d)
     val full = orders.count()

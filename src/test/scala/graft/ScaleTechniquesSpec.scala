@@ -1,10 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.SaltedJoin
@@ -13,15 +10,15 @@ import graft.ops.SaltedJoin
   * aggregations equal their unsalted plans, and bucketed tables co-locate
   * an equi-join with no shuffle on either side.
   */
-class ScaleTechniquesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleTechniquesSpec extends AnyFunSuite with TempDirs {
 
-  private val warehouse = Files.createTempDirectory("graft-wh").toString
+  private val warehouse = tmpDir("graft-wh").toString
 
   lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir", warehouse)
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 

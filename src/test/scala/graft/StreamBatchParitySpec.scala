@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Proof that the declared (batch) event-time queries are the same plans
@@ -11,11 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * aggregation as a real streaming query over `events.parquet` and
   * compare against the declared batch result row-for-row.
   */
-class StreamBatchParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamBatchParitySpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -23,7 +22,7 @@ class StreamBatchParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     * parquet into one.
     */
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("events-stream")
+    val dir = tmpDir("events-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))

@@ -8,7 +8,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{FlowPipeline, FlowRecord, NetFlowCodec, UdpFlowSource, UdpMicroBatchStream, UdpOffset}
@@ -17,14 +16,13 @@ import graft.streaming.{FlowPipeline, FlowRecord, NetFlowCodec, UdpFlowSource, U
   * stage, watermark late-data eviction, stateful flow expiry, streaming
   * dedup, and the time-rotated parquet sink.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tmpDir(prefix).toString
 
   /** Minimal v5 packet with one record (see NetFlowCodecSpec for layout). */
   private def v5Packet(srcPort: Int): Array[Byte] = {
@@ -469,6 +467,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     UdpFlowSource.clear(k1); UdpFlowSource.clear(k2)
   }
 
+  test("FlowApp template scope reads listener options as the source does (case-insensitive)") {
+    import graft.streaming.FlowApp
+    val conf = FlowApp.parseConfig(
+      """[listener.a]
+        |Port = 2056
+        |HOST = 10.0.0.7
+        |
+        |[listener.b]
+        |port = 2057
+        |""".stripMargin)
+    // The scope names the endpoints the source binds, not the defaults.
+    assert(FlowApp.templateScope(conf) == "flowapp:0.0.0.0:2057,10.0.0.7:2056")
+    val table = new UdpFlowSource().getTable(null, null,
+      java.util.Map.of("Port", "2056", "HOST", "10.0.0.7"))
+    assert(table.name() == "udp-flows:10.0.0.7:2056")
+  }
+
   test("decodeErrors surfaces malformed packets instead of dropping them") {
     import spark.implicits._
     val ts = new Timestamp(1700000000000L)
@@ -840,7 +855,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("udp source: seqdir persists committed offsets across a simulated JVM restart") {
     val key = "0.0.0.0:9908"
-    val seqDir = Files.createTempDirectory("udp-seq").toString
+    val seqDir = tmp("udp-seq")
     def mkStream() = new UdpMicroBatchStream(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Map.of("port", "9908", "socket", "false", "seqdir", seqDir)))
@@ -873,7 +888,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       packets = pkts, bytes = bytes, in_if = 0, out_if = 0,
       src_as = 0L, dst_as = 0L, next_hop = null, tos = 0,
       raw = Array.emptyByteArray)
-    val dir = java.nio.file.Files.createTempDirectory("flows-in").toString
+    val dir = tmp("flows-in")
     Seq(flow("10.0.0.1", 500L, 5L), flow("10.0.0.9", 70L, 7L)).toDS()
       .write.mode("overwrite").parquet(dir)
     val stream = spark.readStream
