@@ -29,6 +29,6 @@ object GraftSession {
       // executors, not a local[32] artifact. Static conf: must be set
       // before session creation.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // The `file` scheme without forked chmod/readlink/ls (see LocalFs).
+      // The `file` scheme without forked chmod/readlink (see LocalFs).
       .config(LocalFs.hadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.io.{File, FileNotFoundException}
+import java.io.File
 import java.net.URI
-import java.nio.file.{Files, LinkOption, NoSuchFileException}
-import java.nio.file.attribute.{FileTime, PosixFilePermission}
-import java.security.Principal
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
 
 import scala.jdk.CollectionConverters._
 
@@ -16,11 +15,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Hadoop's local filesystem without child processes. Without `libhadoop`,
   * `RawLocalFileSystem` forks `chmod` for every `setPermission` (so for
-  * every file create and mkdir), `readlink` for every `getFileLinkStatus`
-  * (every `FileContext.rename`, so every checkpoint log commit) and
-  * `ls -ld` when a status's owner or permission is read. These classes do
-  * the same work through `java.nio`, and keep Hadoop's own path where NIO
+  * every file create and mkdir) and `readlink` for every `getFileLinkStatus`
+  * (every `FileContext.rename`, so every checkpoint log commit). These
+  * classes do both through `java.nio`, and keep Hadoop's own path where NIO
   * cannot express it: sticky, setuid and setgid bits, and real symlinks.
+  * Statuses stay Hadoop's: they fork `ls -ld` only if a caller reads the
+  * permission or owner, and nothing on the commit path does.
   */
 object LocalFs {
   /** The Hadoop keys that route the `file` scheme here: the FileSystem API
@@ -40,7 +40,7 @@ object LocalFs {
       .foreach { case (k, v) => spark.conf.set(k, v) }
 }
 
-/** `RawLocalFileSystem` with NIO permission writes and status reads. */
+/** `RawLocalFileSystem` with NIO permission writes and symlink probes. */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   // `permission` arrives with the umask applied. Sticky, setuid and setgid
   // bits stay with Hadoop's chmod(1): NIO cannot set them, and chmod keeps
@@ -54,25 +54,9 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
       .filter(b => (permission.toShort & (0x100 >> b.ordinal)) != 0).toSet.asJava)
   }
 
-  override def getFileStatus(f: Path): FileStatus = {
-    val file = pathToFile(f)
-    val a = try Files.readAttributes(file.toPath, "unix:mode,size,isDirectory," +
-        "isSymbolicLink,lastModifiedTime,lastAccessTime,owner,group",
-        LinkOption.NOFOLLOW_LINKS).asScala
-      catch { case _: NoSuchFileException =>
-        throw new FileNotFoundException(s"File $f does not exist") }
-    if (a("isSymbolicLink").asInstanceOf[Boolean]) super.getFileStatus(f)
-    else new FileStatus(a("size").asInstanceOf[Long],
-      a("isDirectory").asInstanceOf[Boolean], 1, getDefaultBlockSize(f),
-      a("lastModifiedTime").asInstanceOf[FileTime].toMillis,
-      a("lastAccessTime").asInstanceOf[FileTime].toMillis,
-      new FsPermission((a("mode").asInstanceOf[Int] & 0x3ff).toShort),
-      a("owner").asInstanceOf[Principal].getName,
-      a("group").asInstanceOf[Principal].getName,
-      new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
-  }
-
-  // Hadoop probes `new File(f.toString)` with readlink; so does this.
+  // Hadoop probes `new File(f.toString)` with readlink; so does this. A
+  // non-symlink gets Hadoop's status, whose FileNotFoundException covers
+  // every path `File.exists` denies (missing, under a file, unreadable).
   override def getFileLinkStatus(f: Path): FileStatus =
     if (Files.isSymbolicLink(new File(f.toString).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{LocalFs, NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 
 /** graft's NIO local filesystem against Hadoop's `RawLocalFileSystem` on
-  * the same files: the same permissions, the same statuses, the same
+  * the same files: the same permissions, the same link statuses, the same
   * checkpoint bytes.
   */
 class LocalFsSpec extends AnyFunSuite with TempDirs {
@@ -67,9 +67,6 @@ class LocalFsSpec extends AnyFunSuite with TempDirs {
       for ((h, n) <- Seq(hf -> nf, hd -> nd)) {
         assert(mode(n) == mode(h), n)
         assert(mode(n) == perm(octal).toString, n)
-        // The NIO status reads what Hadoop's `ls -ld` reads.
-        val p = new Path(n.toString)
-        assert(status(nio.getFileStatus(p)) == status(hadoop.getFileStatus(p)), n)
       }
     }
   }
@@ -84,25 +81,30 @@ class LocalFsSpec extends AnyFunSuite with TempDirs {
       assert(Files.getAttribute(n, "unix:mode") == Files.getAttribute(h, "unix:mode"), octal)
     }
     assert(nio.getFileStatus(new Path(n.toString)).getPermission.getStickyBit)
-    assert(status(nio.getFileStatus(new Path(n.toString))) ==
-      status(hadoop.getFileStatus(new Path(n.toString))))
   }
 
-  test("getFileLinkStatus: file, directory, missing path, symlink, dangling symlink") {
+  test("getFileLinkStatus: file, directory, missing path, path under a file, symlinks") {
     val dir = tmpDir("localfs-link")
     val file = Files.write(dir.resolve("file"), "x".getBytes(UTF_8))
     val sub = Files.createDirectory(dir.resolve("dir"))
     val link = Files.createSymbolicLink(dir.resolve("link"), file)
     val dangling = Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
     val missing = dir.resolve("missing")
+    // ENOTDIR, not ENOENT: a sink's `_spark_metadata` probe under a file.
+    val underFile = file.resolve("child")
     // Both path forms: Hadoop probes symlinks on the path's string, so a
     // qualified `file:` path never reads as a symlink, here or there.
-    for (p <- Seq(file, sub, missing, link, dangling);
+    for (p <- Seq(file, sub, missing, underFile, link, dangling);
          q <- Seq(new Path(p.toString), new Path(p.toUri))) {
       assert(status(nio.getFileLinkStatus(q)) == status(hadoop.getFileLinkStatus(q)), q)
       assert(status(nio.getFileStatus(q)) == status(hadoop.getFileStatus(q)), q)
     }
-    assert(status(nio.getFileLinkStatus(new Path(missing.toString))) == "FileNotFoundException")
+    for (p <- Seq(missing, underFile)) {
+      assert(status(nio.getFileLinkStatus(new Path(p.toString))) == "FileNotFoundException", p)
+      // exists/isFile/isDirectory answer false only on FileNotFoundException.
+      val q = new Path(p.toUri)
+      assert(!nio.exists(q) && !nio.isFile(q) && !nio.isDirectory(q), p)
+    }
     assert(nio.getFileLinkStatus(new Path(link.toString)).isSymlink)
     assert(nio.getFileLinkStatus(new Path(dangling.toString)).isSymlink)
   }
