@@ -197,8 +197,10 @@ object Bench {
             "[" + f(s.probe) + "," + f(s.raw) + "]").mkString(",") + "]}"
       }.mkString(","))
       sb.append("}}")
+      // Relative: lands in the checkout Bench runs from (sbt forks `run`
+      // in the project root), never in some other copy of the repo.
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/BENCH_DETAIL.json"),
+        java.nio.file.Paths.get("BENCH_DETAIL.json"),
         sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () } // detail file is best-effort
 

@@ -6,12 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.CosineSimilarity
 
-/** Public extension wiring (SURVEY §4): inject the engine's native
-  * functions and planner strategies at session build time via
-  * `spark.sql.extensions=graft.GraftExtensions` or
+/** Public extension wiring (SURVEY §4): inject the `cosine_similarity`
+  * SQL function and the TopKPerGroup planner strategy at session build
+  * time via `spark.sql.extensions=graft.GraftExtensions` or
   * `GraftSession.builder(n).withExtensions(new GraftExtensions)`.
   * (`native.top_k_per_group` also attaches the strategy lazily for
-  * sessions built without extensions.)
+  * sessions built without extensions.) It injects no optimizer rule:
+  * join pre-filtering is left to Spark's runtime bloom filter.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -21,13 +22,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         CosineSimilarity(exprs(0), exprs(1))))
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    // Automatic bloom-filtered join (conf-gated off by default;
-    // spark.graft.bloomJoin.enabled=true turns it on). PreCBO = after the
-    // operator-optimization fixed point, once per optimization.
-    e.injectPreCBORule(org.apache.spark.sql.graft.BloomJoinRule)
-    // Automatic band join: abs(l - r) <= eps with no equi-key becomes a
-    // floor-bucket hash join (conf-gated off by default;
-    // spark.graft.bandJoin.enabled=true turns it on).
-    e.injectPreCBORule(org.apache.spark.sql.graft.BandJoinRule)
   }
 }

@@ -73,27 +73,15 @@ object Bfs {
     * sources(node) → (node, dist) for every node within `maxHops` of
     * some source (sources themselves at dist 0, minimum distance wins).
     */
-  /** `prePartitioned = true` declares that `edges` already arrives
-    * hash-clustered on `u` (a bucketed staged table — the graph_bfs
-    * query's form): the spread+persist is skipped and every round's
-    * frontier join reuses the storage layout directly; only the small
-    * frontier side ever re-shuffles. This is the graph twin of the
-    * bucketed fact-layout contract: an edge relation is ingest-time
-    * state, and re-clustering it per traversal is the cost a graph
-    * store exists to delete.
-    */
   def multiSourceBfs(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      maxFrontier: Long = 1L << 27, prePartitioned: Boolean = false): DataFrame = {
+      maxFrontier: Long = 1L << 27): DataFrame = {
     require(maxHops >= 0, s"multiSourceBfs: maxHops must be >= 0, got $maxHops")
     // Spread + persist the edge relation once: it is re-joined every
     // round, and hash-partitioning it by the probe endpoint lets each
     // round's frontier join reuse the layout (the frontier side is the
     // small side and re-shuffles; the big edge side never moves again).
-    val e =
-      if (prePartitioned) edges.select(col("u"), col("v"))
-        .transform(graft.Q.sketchPersist)
-      else graft.Q.spreadBy(edges.select(col("u"), col("v")), "u")
-        .transform(graft.Q.sketchPersist)
+    val e = graft.Q.spreadBy(edges.select(col("u"), col("v")), "u")
+      .transform(graft.Q.sketchPersist)
     // ACCUMULATE-THEN-MIN (r14 rework, measured faster than the
     // textbook visited/anti-join form): each round records its LEVEL
     // (all nodes reachable in exactly `hop` hops — revisits included)
@@ -112,25 +100,20 @@ object Bfs {
     // same-session A/B at sf0.1) — the per-round planning cost just
     // moves into one big optimization pass — while giving up the
     // pre-round maxFrontier guard. The guard-bearing eager loop stays.
-    def dbg[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_BFS_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[bfsdbg] $label%-12s ${(System.nanoTime()-t0)/1e9}%6.2f s"); r
-      } else f
     try {
-      var level = dbg("src")(sources.select(col("node")).distinct()
+      var level = sources.select(col("node")).distinct()
         .select(col("node"), lit(0L).as("dist"))
-        .localCheckpoint()) // eager: tiny
+        .localCheckpoint() // eager: tiny
       val levels = scala.collection.mutable.ArrayBuffer[DataFrame](level)
       var hop = 1
       var exhausted = false
       while (hop <= maxHops && !exhausted) {
-        val next = dbg(s"build $hop")(level.select(col("node").as("u"))
+        val next = level.select(col("node").as("u"))
           .join(e, "u")
           .select(col("v").as("node")).distinct()
           .select(col("node"), lit(hop.toLong).as("dist"))
-          .transform(graft.Q.cut(_, eager = false)))
-        val n = dbg(s"round $hop")(next.count()) // materializes; terminates; guards
+          .transform(graft.Q.cut(_, eager = false))
+        val n = next.count() // materializes; terminates; guards
         require(n <= maxFrontier,
           s"multiSourceBfs: hop-$hop frontier has $n nodes, exceeding the " +
             s"declared bound of $maxFrontier — at this scale use a " +
@@ -142,8 +125,8 @@ object Bfs {
         }
         hop += 1
       }
-      dbg("result build")(levels.reduce(_ union _)
-        .groupBy("node").agg(min("dist").as("dist")))
+      levels.reduce(_ union _)
+        .groupBy("node").agg(min("dist").as("dist"))
     } finally e.unpersist() // ADVICE r14: release even when a guard throws
     // (every checkpointed level is already materialized by its count(),
     // so the returned rollup never re-reads e)
@@ -174,11 +157,10 @@ object Bfs {
     * round, the sssp admission discipline.
     */
   def multiSourceRelax(roundEdges: Seq[DataFrame], sources: DataFrame,
-      maxNodes: Long = 1L << 27, prePartitioned: Boolean = false): DataFrame = {
+      maxNodes: Long = 1L << 27): DataFrame = {
     val prepared = roundEdges.distinct.map { ed =>
-      val sel = ed.select(col("u"), col("v"), col("w"))
-      ed -> (if (prePartitioned) sel.transform(graft.Q.sketchPersist)
-        else graft.Q.spreadBy(sel, "u").transform(graft.Q.sketchPersist))
+      ed -> graft.Q.spreadBy(ed.select(col("u"), col("v"), col("w")), "u")
+        .transform(graft.Q.sketchPersist)
     }.toMap
     try {
       var dist = sources.select(col("node")).distinct()
@@ -204,7 +186,7 @@ object Bfs {
 
   /** The low-latency ROUND LOOP for bounded traversals: RDD rounds over
     * a pre-partitioned, persisted adjacency RDD — no Catalyst work per
-    * round (r15, measured): with the DataFrame loop, GRAFT_BFS_DEBUG
+    * round (r15, measured): with the DataFrame loop, a per-round timing
     * decomposition at sf0.1 showed ~0.3 s/round of DRIVER-side query
     * compilation (`localCheckpoint(eager=false)` compiles the physical
     * plan — analysis + optimization + codegen) against ~0.15 s/round
@@ -314,13 +296,13 @@ object Bfs {
     *
     * edges(u, v, w) DIRECTED with BIGINT weights (symmetrize first for
     * undirected; integer weights keep every distance an exact integer
-    * sum — the engine's determinism discipline). `prePartitioned` and
-    * the persist/checkpoint/guard structure follow [[multiSourceRelax]]
-    * (this is its uniform-edge-relation special case).
+    * sum — the engine's determinism discipline). The persist/checkpoint/
+    * guard structure follows [[multiSourceRelax]] (this is its
+    * uniform-edge-relation special case).
     */
   def multiSourceSssp(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      maxNodes: Long = 1L << 27, prePartitioned: Boolean = false): DataFrame = {
+      maxNodes: Long = 1L << 27): DataFrame = {
     require(maxHops >= 0, s"multiSourceSssp: maxHops must be >= 0, got $maxHops")
-    multiSourceRelax(Seq.fill(maxHops)(edges), sources, maxNodes, prePartitioned)
+    multiSourceRelax(Seq.fill(maxHops)(edges), sources, maxNodes)
   }
 }

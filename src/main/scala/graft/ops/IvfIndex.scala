@@ -91,20 +91,20 @@ object IvfIndex {
     * distinct form.
     *
     * The joined rows stay SKINNY (id + the ≤nProbe-int cell array);
-    * embeddings re-attach only after the filter, broadcast or
-    * shuffle-merge per `broadcastReattach` ([[Sketches.reattachCosine]]
-    * — carrying the float arrays themselves through the cell join was
-    * measured 2× slower even locally).
+    * embeddings re-attach only after the filter, by broadcast
+    * ([[Sketches.reattachCosine]] — carrying the float arrays
+    * themselves through the cell join was measured 2× slower even
+    * locally).
     */
   def annPairs(embs: DataFrame, k: Int = 16, nProbe: Int = 2,
-      broadcastReattach: Boolean = true, refine: Int = 1): DataFrame = {
+      refine: Int = 1): DataFrame = {
     // One row per vector: its probed cells, sorted. Feeds both sides of
     // the self-join — persist so assignment (k cosine evals per vector
     // + the arg-top fold) runs once.
     val cells = assign(embs, k, nProbe, refine)
       .groupBy("vec_id").agg(sort_array(collect_list(col("cid"))).as("cells"))
       .transform(graft.Q.sketchPersist)
-    pairsFromCells(cells, embs, broadcastReattach)
+    pairsFromCells(cells, embs)
   }
 
   /** [[annPairs]] with the INDEX half staged to parquet (the IvfPq/
@@ -119,8 +119,7 @@ object IvfIndex {
     * the unstaged [[annPairs]] stays gated in SketchesSpec.
     */
   def annPairsStaged(embs: DataFrame, tag: String, k: Int = 16,
-      nProbe: Int = 2, broadcastReattach: Boolean = true,
-      refine: Int = 1): DataFrame = {
+      nProbe: Int = 2, refine: Int = 1): DataFrame = {
     val spark = embs.sparkSession
     val safe = tag.replaceAll("[^A-Za-z0-9]", "_")
     val dir = graft.Q.jvmStageRoot("graft_ivf") + s"/" +
@@ -141,8 +140,7 @@ object IvfIndex {
     // the skinny staged table is cheaper than pinning executor memory.
     // Memoized read (r12): the bare spark.read re-resolved the
     // datasource (listing + footer) on every warm call.
-    pairsFromCells(graft.Q.readStagedParquet(spark, dir), embs,
-      broadcastReattach)
+    pairsFromCells(graft.Q.readStagedParquet(spark, dir), embs)
   }
 
   /** [[centroids]] with the refined codebook staged to parquet per
@@ -166,8 +164,7 @@ object IvfIndex {
     graft.Q.readStagedParquet(spark, dir)
   }
 
-  private def pairsFromCells(cells: DataFrame, embs: DataFrame,
-      broadcastReattach: Boolean): DataFrame = {
+  private def pairsFromCells(cells: DataFrame, embs: DataFrame): DataFrame = {
     val skinny = cells.select(col("vec_id"), col("cells"),
       explode(col("cells")).as("cid"))
     val l = skinny.select(col("vec_id").as("id1"), col("cells").as("cells1"),
@@ -181,6 +178,6 @@ object IvfIndex {
     val cands = l.join(r, col("cid") === col("cid2") && col("id1") < col("id2"))
       .filter(col("cid") === gn.first_common_sorted(col("cells1"), col("cells2")))
       .select("id1", "id2")
-    Sketches.reattachCosine(cands, embs, broadcastReattach)
+    Sketches.reattachCosine(cands, embs)
   }
 }

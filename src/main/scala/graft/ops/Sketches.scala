@@ -419,7 +419,7 @@ object Sketches {
     *    so deep-scale runs flip to skinny+distinct automatically).
     */
   def annPairs(embs: DataFrame, nbits: Int = 4, tables: Int = 16,
-      broadcastReattach: Boolean = true, probe: Int = 0,
+      probe: Int = 0,
       // Test/probe-only override of the emission-form switch (None =
       // auto by key-array volume); SketchesSpec pins both forms equal.
       carryForm: Option[Boolean] = None,
@@ -496,15 +496,13 @@ object Sketches {
       l.join(r, col("k") === col("k2") && col("id1") < col("id2"))
         .select("id1", "id2").distinct()
     }
-    reattachCosine(cands, embs, broadcastReattach)
+    reattachCosine(cands, embs)
   }
 
   /** [[annPairs]] at the declared joint parameters for this corpus size. */
   def annPairsAt(embs: DataFrame, p: LshParams,
-      broadcastReattach: Boolean = true,
       stagedTag: Option[String] = None): DataFrame =
-    annPairs(embs, p.nbits, p.tables, broadcastReattach, p.probe,
-      stagedTag = stagedTag)
+    annPairs(embs, p.nbits, p.tables, p.probe, stagedTag = stagedTag)
 
   /** ASYMMETRIC sign-LSH join: candidate (id1 ∈ fresh, id2 ∈ corpus)
     * pairs with cosine attached — the delta-dedup probe shape. The
@@ -514,9 +512,8 @@ object Sketches {
     * between the two buckets is covered by probing either side — the
     * flip relation is symmetric). Both inputs: (vec_id, embedding).
     */
-  def annJoin(fresh: DataFrame, corpus: DataFrame, p: LshParams,
-      broadcastReattach: Boolean = true): DataFrame =
-    annJoinWith(fresh, corpus, corpusAnchors(corpus, p), p, broadcastReattach)
+  def annJoin(fresh: DataFrame, corpus: DataFrame, p: LshParams): DataFrame =
+    annJoinWith(fresh, corpus, corpusAnchors(corpus, p), p)
 
   /** The corpus-side bucket ANCHORS of [[annJoin]] — (id2, tbl2,
     * bucket2), one row per (vector, table). Exposed separately because
@@ -542,7 +539,7 @@ object Sketches {
     * reattach of candidate ids.
     */
   def annJoinWith(fresh: DataFrame, corpus: DataFrame, anchors: DataFrame,
-      p: LshParams, broadcastReattach: Boolean = true): DataFrame = {
+      p: LshParams): DataFrame = {
     import org.apache.spark.sql.graft.{native => gn}
     val bf0 = graft.Q.spreadBy(fresh, "vec_id")
       .select(col("vec_id"), posexplode(
@@ -559,10 +556,8 @@ object Sketches {
     val cands = bf.join(anchors,
         col("tbl") === col("tbl2") && col("bucket") === col("bucket2"))
       .select("id1", "id2").distinct()
-    def side(src: DataFrame, idCol: String, eCol: String): DataFrame = {
-      val pr = src.select(col("vec_id").as(idCol), col("embedding").as(eCol))
-      if (broadcastReattach) broadcast(pr) else pr.hint("shuffle_merge")
-    }
+    def side(src: DataFrame, idCol: String, eCol: String): DataFrame =
+      broadcast(src.select(col("vec_id").as(idCol), col("embedding").as(eCol)))
     cands.join(side(fresh, "id1", "e1"), "id1")
       .join(side(corpus, "id2", "e2"), "id2")
       .select(col("id1"), col("id2"),
@@ -570,20 +565,15 @@ object Sketches {
           .cast(org.apache.spark.sql.types.DecimalType(18, 4)).as("sim"))
   }
 
-  /** Re-attach embeddings to skinny candidate pairs and score cosine.
-    * `bcast = true`: two broadcast joins — right when the embedding table
-    * fits an executor (local/bench case). `bcast = false`: shuffle-merge
-    * keyed joins — the 100 TB path, where broadcasting the full embedding
-    * table would OOM every executor; hint pins the plan so AQE can't
-    * flip a huge build side back to broadcast.
+  /** Re-attach embeddings to skinny candidate pairs and score cosine:
+    * two broadcast joins — the embedding table fits an executor at every
+    * declared scale. (A table too large to broadcast would need two
+    * keyed shuffle joins on id1/id2 instead.)
     */
-  private[graft] def reattachCosine(cands: DataFrame, embs: DataFrame,
-      bcast: Boolean): DataFrame = {
+  private[graft] def reattachCosine(cands: DataFrame, embs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.{native => gn}
-    def side(idCol: String, eCol: String): DataFrame = {
-      val p = embs.select(col("vec_id").as(idCol), col("embedding").as(eCol))
-      if (bcast) broadcast(p) else p.hint("shuffle_merge")
-    }
+    def side(idCol: String, eCol: String): DataFrame =
+      broadcast(embs.select(col("vec_id").as(idCol), col("embedding").as(eCol)))
     cands.join(side("id1", "e1"), "id1").join(side("id2", "e2"), "id2")
       .select(col("id1"), col("id2"),
         round(gn.cosine_similarity(col("e1"), col("e2")), 4)

@@ -31,25 +31,16 @@ object SubstringDedup {
     * input document (0/0/0 for docs shorter than k words). Unordered —
     * callers sort.
     *
-    * `twoPhaseFirst` picks how the global first occurrence is computed:
-    *
-    *  - `false` (default): ONE min-struct window over the gram
-    *    partition — a single shuffle, the cheap plan on benign corpora.
-    *    Hot-gram hazard: every occurrence of the hottest gram lands in
-    *    one window task, and AQE cannot split window partitions — on
-    *    boilerplate-heavy corpora (one gram at a few % of all windows)
-    *    that task is a long-tail straggler.
-    *  - `true`: two-phase — `groupBy(gram).agg(min(struct(doc_id,
-    *    off)))` + join-back. The map-side partial aggregate compresses
-    *    the hot key to ONE row per map task before the shuffle, and the
-    *    join-back is a plain equi-join that AQE's skew-join optimization
-    *    CAN split (the one-row build side is duplicated per split).
-    *    Costs a second shuffle of the gram relation; buys a flat
-    *    profile under skew. OpsSpec pins both paths equivalent on
-    *    randomized input.
+    * The global first occurrence is ONE min-struct window over the gram
+    * partition — a single shuffle. Hot-gram hazard: every occurrence of
+    * the hottest gram lands in one window task, and AQE cannot split
+    * window partitions, so a boilerplate-heavy corpus (one gram at a few
+    * % of all windows) would see a long-tail straggler there; the
+    * skew-safe form is `groupBy(gram).agg(min(struct))` + an equi-join
+    * back, which AQE's skew join can split, at the cost of a second
+    * shuffle of the gram relation.
     */
-  def windowDupStats(docs: DataFrame, k: Int = 10,
-      twoPhaseFirst: Boolean = false): DataFrame = {
+  def windowDupStats(docs: DataFrame, k: Int = 10): DataFrame = {
     require(k >= 2, s"windowDupStats: window of $k words is degenerate")
     // spreadBy parallelizes the window build off single-split inputs AND
     // leaves a doc_id-keyed exchange both consumers (the gram explode
@@ -67,18 +58,10 @@ object SubstringDedup {
            |  i -> struct(i as off, concat_ws(' ', slice(ws, i, $k)) as gram))"""
           .stripMargin)).as("h"))
       .select(col("doc_id"), col("h.off").as("off"), col("h.gram").as("gram"))
-    // Global first occurrence per gram: min (doc_id, off) struct —
-    // either carried by the window (one shuffle) or aggregated and
-    // joined back (two-phase, skew-safe). See the scaladoc trade.
-    val withFirst =
-      if (!twoPhaseFirst)
-        g.withColumn("first", min(struct(col("doc_id"), col("off")))
-          .over(Window.partitionBy("gram")))
-      else
-        g.join(
-          g.groupBy("gram")
-            .agg(min(struct(col("doc_id"), col("off"))).as("first")),
-          Seq("gram"))
+    // Global first occurrence per gram: min (doc_id, off) struct
+    // carried by the window (one shuffle). See the scaladoc trade.
+    val withFirst = g.withColumn("first",
+      min(struct(col("doc_id"), col("off"))).over(Window.partitionBy("gram")))
     val dup = withFirst
       .filter(!(col("doc_id") === col("first.doc_id")
         && col("off") === col("first.off")))

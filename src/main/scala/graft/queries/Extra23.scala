@@ -543,7 +543,7 @@ object Extra23 {
       // store's whole premise; one staging serves BOTH graph_bfs and
       // graph_sssp). r15 (VERDICT r14 #2): the measured floor was
       // per-round driver-side query COMPILATION (~0.3 s/round of
-      // analysis+codegen vs ~0.15 s of job time, GRAFT_BFS_DEBUG
+      // analysis+codegen vs ~0.15 s of job time, per-round timing
       // decomposition), so the rounds now run as RDD joins over a
       // partitioner-pinned in-memory adjacency (multiSourceBfsRdd —
       // zero Catalyst work per round, zero edge movement). The staged

@@ -42,25 +42,17 @@ object Extra9 {
     * attach becomes two shuffle joins on doc_id — the arrays stay
     * bounded by document length either way.
     *
-    * `prefilterDf = true` is the cluster-scale df switch (spec-equal,
-    * ScaleTechniquesSpec): a map-side-COMPRESSED count rollup computes
-    * df first so no collected set ever exceeds the cap (100) — the
-    * direct form must materialize a hot boilerplate gram's full doc
-    * set in one reduce task just to discard it; locally the direct
-    * form's single shuffle wins.
-    */
-  private[graft] def containment(s: org.apache.spark.sql.SparkSession,
-      d: String, prefilterDf: Boolean,
-      stagedTag: Option[String] = None): org.apache.spark.sql.DataFrame =
-    containmentOf(T.documents(s, d).select("doc_id", "text"), prefilterDf,
-      stagedTag)
-
-  /** Same pipeline over an explicit (doc_id, text) frame — the declared
-    * query binds the fixture table; SketchesSpec binds its own corpus to
+    * The df cap is applied after the collect_set (the set's size IS the
+    * df): one shuffle, the local winner. At cluster scale a hot
+    * boilerplate gram's full doc set is still materialized in one reduce
+    * task just to be discarded; a map-side-compressed df count before
+    * the collect would bound every set at the cap for a second shuffle.
+    *
+    * Runs over an explicit (doc_id, text) frame: the declared query
+    * binds the fixture table; SketchesSpec binds its own corpus to
     * compare the fresh and staged forms of the EXACT declared shape.
     */
   private[graft] def containmentOf(docsRaw: org.apache.spark.sql.DataFrame,
-      prefilterDf: Boolean,
       stagedTag: Option[String] = None): org.apache.spark.sql.DataFrame = {
     val docs = docsRaw.select(col("doc_id"),
       expr("filter(split(text, ' '), x -> x != '')").as("ws"))
@@ -79,15 +71,8 @@ object Extra9 {
     // df cap: boilerplate shingles never enter the index (both the
     // numerator and the denominator — the declared contract; the
     // oracle replays the identical cap).
-    val byGram = if (prefilterDf) {
-      val keep = grams.groupBy("g").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 100).select("g")
-      grams.join(keep, "g")
-        .groupBy("g").agg(collect_set(col("doc_id")).as("ids"))
-    } else {
-      grams.groupBy("g").agg(collect_set(col("doc_id")).as("ids"))
-        .filter(size(col("ids")) <= 100)
-    }
+    val byGram = grams.groupBy("g").agg(collect_set(col("doc_id")).as("ids"))
+      .filter(size(col("ids")) <= 100)
     // Per-doc gram arrays in the global (df, g) order — df comes free
     // as size(ids), so no extra pass; sort_array on the (df, g) structs
     // makes every doc's array rarest-first under ONE total order (g
@@ -113,8 +98,7 @@ object Extra9 {
       case Some(t) =>
         val spark = docsRaw.sparkSession
         val safe = t.replaceAll("[^A-Za-z0-9]", "_")
-        val dir = graft.Q.jvmStageRoot("graft_docgrams") + s"/" +
-          s"${safe}_pf$prefilterDf"
+        val dir = graft.Q.jvmStageRoot("graft_docgrams") + s"/$safe"
         graft.Q.once(dir) {
           // Deliberately NOT fileSized (r17, the lshbase/ivf-cells
           // negative-result class): the probe/index self-join explodes
@@ -286,9 +270,7 @@ object Extra9 {
         |ORDER BY id1, id2""".stripMargin) { (s, d) =>
       // r14: the per-doc gram-array relation (the pipeline's BUILD half)
       // serves staged — DedupStageProbe: 1.25 → 0.82 s warm at sf0.1.
-      containment(s, d, prefilterDf =
-        s.conf.getOption("spark.graft.containment.prefilterDf")
-          .exists(_.toBoolean),
+      containmentOf(T.documents(s, d).select("doc_id", "text"),
         stagedTag = Some(graft.Q.corpusTag(s, d, "documents")))
     },
 

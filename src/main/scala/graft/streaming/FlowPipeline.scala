@@ -5,7 +5,7 @@ import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
 
 /** The nf2pq-shaped pipeline (SURVEY §3.1/§3.4), Spark-native:
   *
@@ -369,57 +369,6 @@ object FlowPipeline {
   /** Expired flow emitted once its key has been idle > `idleMs`. */
   final case class ExpiredFlow(flow_key: String, start_ms: Long, end_ms: Long,
       packets: Long, bytes: Long)
-
-  /** Flow expiry on the Spark 4 arbitrary-state API
-    * (`transformWithState` + `StatefulProcessor`): same flow-cache
-    * semantics as [[expireFlows]], with explicit value state and
-    * event-time timers.
-    */
-  final class FlowExpiryProcessor(idleMs: Long)
-      extends StatefulProcessor[String, PacketObs, ExpiredFlow] {
-    @transient private var agg: ValueState[FlowAgg] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      agg = getHandle.getValueState[FlowAgg]("agg",
-        Encoders.product[FlowAgg], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[PacketObs],
-        tv: TimerValues): Iterator[ExpiredFlow] = {
-      val prev = if (agg.exists()) agg.get() else FlowAgg(Long.MaxValue, 0L, 0L, 0L)
-      val updated = rows.foldLeft(prev) { (a, o) =>
-        val t = o.ts.getTime
-        FlowAgg(math.min(a.first_ms, t), math.max(a.last_ms, t),
-          a.packets + o.packets, a.bytes + o.bytes)
-      }
-      agg.update(updated)
-      // One live timer per key: replace any earlier deadline.
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(updated.last_ms + idleMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[ExpiredFlow] = {
-      if (!agg.exists()) Iterator.empty
-      else {
-        val a = agg.get()
-        agg.clear()
-        Iterator.single(ExpiredFlow(key, a.first_ms, a.last_ms, a.packets, a.bytes))
-      }
-    }
-  }
-
-  /** [[expireFlows]] semantics on transformWithState. */
-  def expireFlowsTws(packets: Dataset[PacketObs], idleMs: Long,
-      watermarkDelay: String = "10 seconds"): Dataset[ExpiredFlow] = {
-    val spark = packets.sparkSession
-    import spark.implicits._
-    packets
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.flow_key)
-      .transformWithState(new FlowExpiryProcessor(idleMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
 
   /** Stateful flow expiry — the collector's flow-cache semantics
     * (SURVEY §2.9): per-key aggregation state, a record emitted when the

@@ -143,31 +143,6 @@ object native {
       spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
     ext.buildPlannerStrategies(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
 
-  /** Test-visible view of the injected pre-CBO rules (same bridge reason). */
-  def preCBORulesOf(ext: org.apache.spark.sql.SparkSessionExtensions,
-      spark: SparkSession): Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildPreCBORules(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-
-  /** Attach [[BloomJoinRule]] to a LIVE session (extension wiring needs a
-    * session rebuild; tests and ad-hoc sessions attach through the public
-    * experimental-methods hook instead). Idempotent.
-    */
-  def attachBloomJoinRule(spark: SparkSession): Unit = native.synchronized {
-    val have = spark.experimental.extraOptimizations
-    if (!have.exists(_.isInstanceOf[BloomJoinRule]))
-      spark.experimental.extraOptimizations = have :+ BloomJoinRule(spark)
-  }
-
-  /** Attach [[BandJoinRule]] to a LIVE session — same bridge as
-    * [[attachBloomJoinRule]]. Idempotent.
-    */
-  def attachBandJoinRule(spark: SparkSession): Unit = native.synchronized {
-    val have = spark.experimental.extraOptimizations
-    if (!have.exists(_.isInstanceOf[BandJoinRule]))
-      spark.experimental.extraOptimizations = have :+ BandJoinRule(spark)
-  }
-
   /** Register `cosine_similarity` for SQL text in an existing session.
     * (New sessions can instead use `spark.sql.extensions=graft.GraftExtensions`.)
     */

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The one session builder: its conf reaches the session, and no other
-  * file in the tree builds a session by hand.
+  * file in the tree builds a session by hand. Every `spark.graft.*` key
+  * the engine reads is documented in README's knob table, and nothing
+  * else is.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -28,19 +30,35 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
   test("no source file outside GraftSession.scala calls the raw session builder") {
     // Split so this file does not match its own scan.
     val needle = "SparkSession" + ".builder()"
-    def scalaFiles(root: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(root))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
     val offenders = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
       .filter(p => p.getFileName.toString != "GraftSession.scala")
       .filter(p => Files.readString(p).contains(needle))
     assert(offenders.isEmpty,
       s"build sessions with GraftSession.builder(cpus), not $needle: " +
         offenders.mkString(", "))
+  }
+
+  test("spark.graft.* keys read in src/main == README's Configuration knobs table") {
+    // A key is "read" when a string literal in src/main starts with it.
+    val literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_])".r
+    val read = scalaFiles("src/main/scala")
+      .flatMap(p => literal.findAllMatchIn(Files.readString(p)).map(_.group(1)))
+      .toSet
+    val row = "^\\| `(spark\\.graft\\.[^`]+)`".r
+    val documented = Files.readString(Paths.get("README.md"))
+      .split("\n## Configuration knobs\n", 2)(1).split("\n## ", 2)(0)
+      .linesIterator.flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    assert(read.nonEmpty)
+    assert(read -- documented == Set.empty, "read in src/main but missing from README")
+    assert(documented -- read == Set.empty, "in README but read nowhere in src/main")
   }
 }

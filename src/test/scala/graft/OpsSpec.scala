@@ -191,25 +191,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("text analysis: langid argmax deterministic, quality score bounded") {
-    import spark.implicits._
-    val docs = Seq(
-      (0L, "key agg row row agg"),          // en markers dominate
-      (1L, "scan spark join join"),         // fr markers dominate
-      (2L, "nothing matching here at all")  // all-zero → alphabetical 'de'
-    ).toDF("doc_id", "text")
-    val guessed = graft.ops.TextAnalysis.withLangGuess(docs)
-      .select("doc_id", "lang_guess").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(guessed == Map(0L -> "en", 1L -> "fr", 2L -> "de"))
-
-    val scored = graft.ops.TextAnalysis
-      .withQualityScore(Tables.documents(spark, "/root/testdata/sf0.001"))
-      .select("quality").collect().map(_.getInt(0))
-    assert(scored.forall(q => q >= 0 && q <= 100))
-    assert(scored.distinct.length > 1) // discriminates
-  }
-
   test("JdbcFlowSink writes and reads back through embedded Derby") {
     val media = graft.streaming.FlowPipeline // touch to keep import pattern
     val url = "jdbc:derby:memory:flowsdb;create=true"
@@ -404,16 +385,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, nWin.toLong, ivs.size.toLong, covered.toLong)
     }.toSet
     assert(dups.nonEmpty && expected.exists(_._4 > 0)) // non-vacuous fixture
-    // BOTH first-occurrence paths (one-shuffle window and skew-safe
-    // two-phase agg+join) must match the brute force — and so each other.
-    for (twoPhase <- Seq(false, true)) {
-      val got = graft.ops.SubstringDedup
-        .windowDupStats(docs.toDF("doc_id", "text"), k = k,
-          twoPhaseFirst = twoPhase)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(got.length == docs.size, s"twoPhase=$twoPhase") // one row per doc
-      assert(got.toSet == expected, s"twoPhase=$twoPhase")
-    }
+    val got = graft.ops.SubstringDedup
+      .windowDupStats(docs.toDF("doc_id", "text"), k = k)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(got.length == docs.size) // one row per doc
+    assert(got.toSet == expected)
   }
 
   test("cluster_kmeans invariants: deterministic sizes, Lloyd objective non-increasing") {

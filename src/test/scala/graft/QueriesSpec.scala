@@ -32,30 +32,35 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("every declared query runs and returns rows at sf0.001") {
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      if (n == 0) Some(name) else None
-    }
-    // anti-join and bag-difference are legitimately empty at tiny scale.
-    val allowedEmpty = Set("join_anti", "set_except_all")
-    assert(empties.forall(allowedEmpty), s"empty results: $empties")
-  }
-
-  test("no declared query outputs array/map/struct/binary columns") {
-    // The driver's pandas-based comparator cannot hash complex-typed cells
-    // (round-1 fn_array died on TypeError: unhashable 'numpy.ndarray').
+  test("every declared query returns rows of flat columns, deterministically") {
+    // One construction per run: the first DataFrame's schema and rows,
+    // then a second construction whose rows must be equal (same plan,
+    // twice).
     import org.apache.spark.sql.types._
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      fn(spark, sf).schema.fields.collect {
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, sf)
+      // The driver's pandas-based comparator cannot hash complex-typed
+      // cells (round-1 fn_array died on TypeError: unhashable
+      // 'numpy.ndarray').
+      val complex = df.schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
                   f.dataType.isInstanceOf[MapType] ||
                   f.dataType.isInstanceOf[StructType] ||
                   f.dataType == BinaryType =>
           s"$name.${f.name}: ${f.dataType.simpleString}"
       }
+      val a = df.collect().toSeq
+      val b = fn(spark, sf).collect().toSeq
+      (name, a.isEmpty, complex, a != b)
     }
+    // anti-join and bag-difference are legitimately empty at tiny scale.
+    val allowedEmpty = Set("join_anti", "set_except_all")
+    val empties = results.collect { case (name, true, _, _) => name }
+    assert(empties.forall(allowedEmpty), s"empty results: $empties")
+    val offenders = results.flatMap(_._3)
     assert(offenders.isEmpty, s"complex-typed output columns: $offenders")
+    val flaky = results.collect { case (name, _, _, true) => name }
+    assert(flaky.isEmpty, s"nondeterministic: $flaky")
   }
 
   test("representative queries are invariant to shuffle width (4 vs 7 partitions)") {
@@ -80,15 +85,6 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (a != b) Some(name) else None
     }
     assert(diverged.isEmpty, s"partitioning-dependent results: $diverged")
-  }
-
-  test("every declared query is deterministic across runs (same plan, twice)") {
-    val flaky = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val a = fn(spark, sf).collect().toSeq
-      val b = fn(spark, sf).collect().toSeq
-      if (a != b) Some(name) else None
-    }
-    assert(flaky.isEmpty, s"nondeterministic: $flaky")
   }
 
   test("agg_regression's exact-sum forms agree with the regr_* built-ins to 1e-6") {

@@ -4,11 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.SaltedJoin
-
-/** The remaining 100 TB techniques as executable evidence: salted joins/
-  * aggregations equal their unsalted plans, and bucketed tables co-locate
-  * an equi-join with no shuffle on either side.
+/** The remaining 100 TB techniques as executable evidence: the bloom
+  * pre-filter prunes without false negatives, and bucketed tables
+  * co-locate an equi-join with no shuffle on either side.
   */
 class ScaleTechniquesSpec extends AnyFunSuite with TempDirs {
 
@@ -21,64 +19,6 @@ class ScaleTechniquesSpec extends AnyFunSuite with TempDirs {
   override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
-
-  test("salted join equals plain join on a skewed key") {
-    val li = Tables.lineitem(spark, sf)   // l_returnflag: 3 hot keys
-    val dim = Tables.lineitem(spark, sf)
-      .select(col("l_returnflag")).distinct()
-      .withColumn("flag_name", concat(lit("flag_"), col("l_returnflag")))
-    val plain = li.join(dim, "l_returnflag")
-      .groupBy("flag_name").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = SaltedJoin.join(li, dim, key = "l_returnflag",
-        saltCol = "l_orderkey", salts = 8)
-      .groupBy("flag_name").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("salted aggregation equals plain aggregation") {
-    val li = Tables.lineitem(spark, sf)
-    val plain = li.groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), sum(Q.dec2(col("l_quantity"))).as("s"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDecimal(2))).toSet
-    val salted = SaltedJoin.saltedCountSum(
-        li.select(col("l_returnflag"), Q.dec2(col("l_quantity")).as("q"),
-          col("l_orderkey")),
-        key = "l_returnflag", sumCol = "q", saltCol = "l_orderkey", salts = 8)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDecimal(2))).toSet
-    assert(salted == plain)
-  }
-
-  test("ANN re-attach without broadcast: no BroadcastExchange, same results") {
-    val embs = Tables.embeddings(spark, sf)
-    for ((name, run) <- Seq[(String, Boolean => org.apache.spark.sql.DataFrame)](
-        "lsh" -> (b => graft.ops.Sketches.annPairs(embs, nbits = 4, tables = 16,
-          broadcastReattach = b)),
-        "ivf" -> (b => graft.ops.IvfIndex.annPairs(embs, k = 16, nProbe = 2,
-          broadcastReattach = b)))) {
-      val shuffled = run(false)
-      val rows = shuffled.collect().map(_.toSeq).toSet
-      // Only the embedding re-attach joins (keyed on id1/id2) must avoid
-      // broadcast — candidate-generation joins and the tiny IVF centroid
-      // table may broadcast at any scale.
-      val planStr = shuffled.queryExecution.executedPlan.toString()
-      val reattachBcast = planStr.linesIterator.filter { l =>
-        val i = l.indexOf("BroadcastHashJoin")
-        // left-keys bracket group only — the candidate join's extra
-        // condition (id1 < id2) must not trip this.
-        i >= 0 && {
-          val keys = l.substring(i).takeWhile(_ != ']')
-          keys.contains("id1#") || keys.contains("id2#")
-        }
-      }.toList
-      assert(reattachBcast.isEmpty,
-        s"$name non-broadcast re-attach still broadcasts: $reattachBcast")
-      assert(rows == run(true).collect().map(_.toSeq).toSet,
-        s"$name broadcast/shuffle paths disagree")
-      assert(rows.nonEmpty)
-    }
-  }
 
   test("bloom pre-filter: no false negatives, real pruning") {
     import org.apache.spark.sql.graft.{native => gn}
@@ -128,20 +68,6 @@ class ScaleTechniquesSpec extends AnyFunSuite with TempDirs {
       spark.sql("DROP TABLE IF EXISTS orders_bkt")
       spark.sql("DROP TABLE IF EXISTS customer_bkt")
     }
-  }
-
-  test("containment dedup: direct collect_set path equals the df-prefilter " +
-    "cluster-scale path") {
-    // dedup_containment ships two plan-equivalent forms (Extra9
-    // .containment): the locally-faster single-shuffle collect_set index
-    // and the conf-gated df-count prefilter that bounds every collected
-    // doc set at the cap BEFORE any set is built (the GB-hot-gram
-    // defense). Same rows, byte for byte, is the switch's contract.
-    val direct = graft.queries.Extra9.containment(spark, sf, prefilterDf = false)
-      .collect().map(_.toString).toSeq
-    val prefiltered = graft.queries.Extra9.containment(spark, sf, prefilterDf = true)
-      .collect().map(_.toString).toSeq
-    assert(direct.nonEmpty && direct == prefiltered)
   }
 
   test("sql_q21 rewrite ≡ the correlated EXISTS/NOT EXISTS form on seeded random facts") {

@@ -596,9 +596,9 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val staged = Sketches.minhashNearDups(docs, 0.5, stagedTag = Some(docTag))
       .orderBy("id1", "id2").collect().toSeq
     assert(staged == fresh, s"minhash staged drifted: ${staged.size} vs ${fresh.size}")
-    val cFresh = graft.queries.Extra9.containmentOf(docs, prefilterDf = false)
+    val cFresh = graft.queries.Extra9.containmentOf(docs)
       .collect().toSeq
-    val cStaged = graft.queries.Extra9.containmentOf(docs, prefilterDf = false,
+    val cStaged = graft.queries.Extra9.containmentOf(docs,
       stagedTag = Some(docTag)).collect().toSeq
     assert(cStaged == cFresh, s"containment staged drifted: ${cStaged.size} vs ${cFresh.size}")
     val embs = graft.Tables.embeddings(spark, d)

@@ -138,32 +138,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     q.stop()
   }
 
-  test("transformWithState flow expiry matches flatMapGroupsWithState semantics") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[FlowPipeline.PacketObs]
-    def obs(key: String, min: Int, pkts: Long, bytes: Long) =
-      FlowPipeline.PacketObs(key, new Timestamp(1700000000000L + min * 60000L), pkts, bytes)
-
-    // transformWithState needs a multi-column-family store (RocksDB)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val expired = FlowPipeline.expireFlowsTws(input.toDS(), idleMs = 5 * 60000L,
-      watermarkDelay = "0 seconds")
-    val q = expired.writeStream.format("memory").queryName("expired_tws")
-      .outputMode(OutputMode.Append()).start()
-    input.addData(obs("g1", 0, 2, 200), obs("g1", 2, 3, 300))
-    q.processAllAvailable()
-    input.addData(obs("g2", 30, 1, 50))
-    q.processAllAvailable()
-    input.addData(obs("g2", 31, 1, 50))
-    q.processAllAvailable()
-    val rows = spark.sql("SELECT flow_key, packets, bytes FROM expired_tws").collect()
-    assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      .contains(("g1", 5L, 500L)))
-    q.stop()
-  }
-
   test("stream-stream interval join with watermarks") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -612,28 +586,35 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     UdpFlowSource.clear(key)
     val out = tmp("tmpl-durable-out")
     val ckpt = tmp("tmpl-durable-ckpt")
+    // transformWithState needs a multi-column-family store (RocksDB);
+    // set on the shared session for this test only, so every other
+    // stateful test runs on the default store FlowApp uses.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def packets() = spark.readStream.format("udp-flows")
-      .option("port", "9960").option("socket", "false").load()
-    // run 1: template only
-    UdpFlowSource.inject(key, 1700000000000000L, "10.9.9.5", v9TemplateOnly())
-    val q1 = FlowPipeline.startParquetSink(
-      FlowPipeline.decodeDurable(packets()), out, ckpt, interval = "1 seconds")
-    q1.processAllAvailable(); q1.stop()
-    // (no parquet read here: the template-only batch emits zero flows,
-    // so the sink dir has no data files yet and schema inference would
-    // throw — the final read asserts batch 1 contributed nothing.)
-    // run 2 (the restart): data record only — no template in this run
-    UdpFlowSource.inject(key, 1700000000000001L, "10.9.9.5", v9DataOnly(9100, 77))
-    val q2 = FlowPipeline.startParquetSink(
-      FlowPipeline.decodeDurable(packets()), out, ckpt, interval = "1 seconds")
-    q2.processAllAvailable(); q2.stop()
-    val got = spark.read.parquet(out).select("src_port", "bytes").collect()
-    assert(got.length == 1 && got.head.getInt(0) == 9100
-      && got.head.getLong(1) == 77L,
-      s"restored-state decode failed: ${got.toSeq}")
-    UdpFlowSource.clear(key)
+    try {
+      def packets() = spark.readStream.format("udp-flows")
+        .option("port", "9960").option("socket", "false").load()
+      // run 1: template only
+      UdpFlowSource.inject(key, 1700000000000000L, "10.9.9.5", v9TemplateOnly())
+      val q1 = FlowPipeline.startParquetSink(
+        FlowPipeline.decodeDurable(packets()), out, ckpt, interval = "1 seconds")
+      q1.processAllAvailable(); q1.stop()
+      // (no parquet read here: the template-only batch emits zero flows,
+      // so the sink dir has no data files yet and schema inference would
+      // throw — the final read asserts batch 1 contributed nothing.)
+      // run 2 (the restart): data record only — no template in this run
+      UdpFlowSource.inject(key, 1700000000000001L, "10.9.9.5", v9DataOnly(9100, 77))
+      val q2 = FlowPipeline.startParquetSink(
+        FlowPipeline.decodeDurable(packets()), out, ckpt, interval = "1 seconds")
+      q2.processAllAvailable(); q2.stop()
+      val got = spark.read.parquet(out).select("src_port", "bytes").collect()
+      assert(got.length == 1 && got.head.getInt(0) == 9100
+        && got.head.getLong(1) == 77L,
+        s"restored-state decode failed: ${got.toSeq}")
+    } finally {
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      UdpFlowSource.clear(key)
+    }
   }
 
   test("capstone: decode → de-sample → top-talkers via the custom TopK operator") {
