@@ -32,17 +32,17 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("every declared query returns rows of flat columns, deterministically") {
-    // One construction per run: the first DataFrame's schema and rows,
-    // then a second construction whose rows must be equal (same plan,
-    // twice).
+  /** One pass over the declared queries, shared by the three per-query
+    * tests below: each query is constructed once for its schema and a
+    * collect, then once more for the repeat collect (same plan, twice).
+    * Fields: name, empty result, complex-typed output columns, rows differ
+    * between the two runs.
+    */
+  private lazy val perQuery: Seq[(String, Boolean, Seq[String], Boolean)] = {
     import org.apache.spark.sql.types._
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, sf)
-      // The driver's pandas-based comparator cannot hash complex-typed
-      // cells (round-1 fn_array died on TypeError: unhashable
-      // 'numpy.ndarray').
-      val complex = df.schema.fields.collect {
+      val complex = df.schema.fields.toSeq.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
                   f.dataType.isInstanceOf[MapType] ||
                   f.dataType.isInstanceOf[StructType] ||
@@ -53,14 +53,20 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       val b = fn(spark, sf).collect().toSeq
       (name, a.isEmpty, complex, a != b)
     }
+  }
+
+  test("every declared query runs and returns rows at sf0.001") {
+    val empties = perQuery.collect { case (name, true, _, _) => name }
     // anti-join and bag-difference are legitimately empty at tiny scale.
     val allowedEmpty = Set("join_anti", "set_except_all")
-    val empties = results.collect { case (name, true, _, _) => name }
     assert(empties.forall(allowedEmpty), s"empty results: $empties")
-    val offenders = results.flatMap(_._3)
+  }
+
+  test("no declared query outputs array/map/struct/binary columns") {
+    // The driver's pandas-based comparator cannot hash complex-typed cells
+    // (round-1 fn_array died on TypeError: unhashable 'numpy.ndarray').
+    val offenders = perQuery.flatMap(_._3)
     assert(offenders.isEmpty, s"complex-typed output columns: $offenders")
-    val flaky = results.collect { case (name, _, _, true) => name }
-    assert(flaky.isEmpty, s"nondeterministic: $flaky")
   }
 
   test("representative queries are invariant to shuffle width (4 vs 7 partitions)") {
@@ -85,6 +91,11 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (a != b) Some(name) else None
     }
     assert(diverged.isEmpty, s"partitioning-dependent results: $diverged")
+  }
+
+  test("every declared query is deterministic across runs (same plan, twice)") {
+    val flaky = perQuery.collect { case (name, _, _, true) => name }
+    assert(flaky.isEmpty, s"nondeterministic: $flaky")
   }
 
   test("agg_regression's exact-sum forms agree with the regr_* built-ins to 1e-6") {
