@@ -129,7 +129,6 @@ object FlowApp {
     */
   def start(spark: SparkSession,
       config: Map[String, Map[String, String]]): Seq[StreamingQuery] = {
-    import org.apache.spark.sql.functions.{col, date_format}
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     LocalFs.install(spark)
     val flows = FlowPipeline.decode(packetStream(spark, config),
@@ -138,9 +137,7 @@ object FlowApp {
       case (Some(p), Some(c)) =>
         val dir = req(p, "parquet", "dir")
         val sink = chSink(c)
-        val q = flows.toDF()
-          .withColumn("date", date_format(col("start_ts"), "yyyy-MM-dd"))
-          .withColumn("hour", date_format(col("start_ts"), "HH"))
+        val q = FlowPipeline.withDateHour(flows.toDF())
           .writeStream
           .foreachBatch { (df: DataFrame, id: Long) =>
             val batch = df.persist()

@@ -25,10 +25,11 @@ object FlowPipeline {
     * (exporters are sticky to a listener/partition, so an exporter's
     * template and data packets decode on the same executor — the same
     * co-location the reference's per-listener threads assume). The
-    * `udp-flows` source does not provide that stickiness: it splits a
-    * batch by position, so a template and the data it describes can
-    * decode in two concurrent tasks and the data miss the template
-    * (ROADMAP direction 1).
+    * `udp-flows` source does not provide that stickiness: a batch of up
+    * to 128 KiB is one slice, so its templates and data decode in order
+    * in one task, but a larger batch is split by position, so a
+    * template and the data it describes can decode in two concurrent
+    * tasks and the data miss the template (ROADMAP direction 1).
     *
     * Scoped by caller-chosen name so concurrent pipelines/tests cannot
     * cross-pollinate. Honest recovery caveat (shared with the
@@ -143,8 +144,12 @@ object FlowPipeline {
     * immutable map through the packets of one partition, in arrival
     * order). Exporters are sticky to a listener/partition in deployment,
     * so templates and their data records co-locate — same assumption the
-    * reference's per-listener threads make. mapPartitions is justified
-    * here (SURVEY §2.10: imperative per-partition logic with local state).
+    * reference's per-listener threads make. The `udp-flows` source keeps
+    * a batch of up to 128 KiB in one partition; only a larger batch is
+    * split by position, and there a template and its data can land in
+    * different partitions (see [[TemplateStore]]). mapPartitions is
+    * justified here (SURVEY §2.10: imperative per-partition logic with
+    * local state).
     *
     * `templateScope`: None (default) keeps the stage PURE — template
     * state starts empty every batch/run, results are a function of the
@@ -225,6 +230,14 @@ object FlowPipeline {
       writeBatch(desample(batch, optionsSnapshot(batch.sparkSession)), id)
     }
 
+  /** The `date` (yyyy-MM-dd) and `hour` (HH) partition columns that the
+    * Parquet sinks write by, derived from `start_ts`.
+    */
+  private[streaming] def withDateHour(flows: DataFrame): DataFrame =
+    flows
+      .withColumn("date", date_format(col("start_ts"), "yyyy-MM-dd"))
+      .withColumn("hour", date_format(col("start_ts"), "HH"))
+
   /** Time-rotated Parquet sink: the reference rotates output files on a
     * wall-clock interval; the Spark-native equivalent is date/hour
     * partition directories + a processing-time trigger + checkpointed
@@ -233,9 +246,7 @@ object FlowPipeline {
   def startParquetSink(flows: Dataset[FlowRecord], outDir: String,
       checkpointDir: String, interval: String = "60 seconds"): StreamingQuery = {
     LocalFs.install(flows.sparkSession)
-    flows.toDF()
-      .withColumn("date", date_format(col("start_ts"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("start_ts"), "HH"))
+    withDateHour(flows.toDF())
       .writeStream
       .format("parquet")
       .option("path", outDir)

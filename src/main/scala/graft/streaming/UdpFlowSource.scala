@@ -25,9 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Usage: `spark.readStream.format("udp-flows").option("port","2055").load()`
   *
   * Scale notes: one listener endpoint = one offset log. On a cluster you
-  * run N sources (one per receiver host) and `union` them; each
-  * micro-batch is split into `partitions` input splits so decode
-  * parallelizes. Local tests inject datagrams via [[UdpFlowSource.inject]]
+  * run N sources (one per receiver host) and `union` them. Each
+  * micro-batch is cut into one input split per 128 KiB of datagram
+  * payload, at most `partitions` (default 4), as contiguous
+  * arrival-order ranges: a small batch decodes in one task, a large one
+  * in parallel. Local tests inject datagrams via [[UdpFlowSource.inject]]
   * instead of opening a real socket (set option `socket=false`).
   */
 class UdpFlowSource extends TableProvider with DataSourceRegister {
@@ -187,11 +189,19 @@ object UdpFlowSource {
 final class UdpMicroBatchStream(options: CaseInsensitiveStringMap)
     extends MicroBatchStream {
 
+  // Payload bytes per input slice. Each slice is one task, and a Parquet
+  // write task pays about 15–20 ms before it decodes anything: it
+  // deserializes the session's Hadoop configuration twice. Decode plus
+  // write costs about 0.15 ms per KiB of datagrams, so a second task
+  // only pays off once it takes over 100–150 KiB of work (flowbench
+  // ingest workloads, 4-core x86 box).
+  private val SliceBytes = 128L * 1024
+
   private val key = UdpFlowSource.endpointKey(options)
   // Parse every option BEFORE registering: a constructor failure after
   // register would leave the endpoint permanently wedged (stop() never
   // runs on a half-constructed stream).
-  private val numPartitions = options.getInt("partitions", 4)
+  private val maxSlices = options.getInt("partitions", 4)
   private val useSocket = options.getBoolean("socket", true)
   private val port = options.getInt("port", 2055)
   private val host = options.getOrDefault("host", "0.0.0.0")
@@ -306,8 +316,14 @@ final class UdpMicroBatchStream(options: CaseInsensitiveStringMap)
     val rows = UdpFlowSource.slice(key,
       start.asInstanceOf[UdpOffset].seq, end.asInstanceOf[UdpOffset].seq)
     if (rows.isEmpty) Array.empty
-    else rows.grouped(math.max(1, rows.length / numPartitions))
-      .map(PacketSlice).toArray[InputPartition]
+    else {
+      // One slice per SliceBytes of payload, at most `partitions`, each a
+      // contiguous arrival-order range.
+      val bytes = rows.iterator.map(_._3.length.toLong).sum
+      val n = math.max(1L, math.min(maxSlices.toLong,
+        (bytes + SliceBytes - 1) / SliceBytes)).toInt
+      rows.grouped((rows.length + n - 1) / n).map(PacketSlice).toArray[InputPartition]
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{FlowPipeline, FlowRecord, NetFlowCodec, UdpFlowSource, UdpMicroBatchStream, UdpOffset}
+import graft.streaming.{FlowPipeline, FlowRecord, NetFlowCodec, PacketSlice, UdpFlowSource, UdpMicroBatchStream, UdpOffset}
 
 /** End-to-end streaming tests: the UDP DSv2 source feeding the decode
   * stage, watermark late-data eviction, stateful flow expiry, streaming
@@ -857,6 +857,85 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(rows.length == 1)
     second.stop()
     UdpFlowSource.clear(key)
+  }
+
+  test("udp source: a batch is cut into one slice per 128 KiB of payload, at most `partitions`") {
+    val key = "0.0.0.0:9907"
+    UdpFlowSource.clear(key)
+    val stream = new UdpMicroBatchStream(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("port", "9907", "socket", "false", "partitions", "4")))
+    var seq = 0L
+    // Injects `count` datagrams of `size` bytes as one batch, plans it and
+    // returns the slice count; the slices must hold the batch in order.
+    def slices(count: Int, size: Int): Int = {
+      val from = seq
+      val sent = (0 until count).map { i =>
+        val row = (1700000000000000L + seq, s"10.1.2.$i", Array.fill[Byte](size)(i.toByte))
+        UdpFlowSource.inject(key, row._1, row._2, row._3)
+        seq += 1
+        (row._1, row._2, row._3.toSeq)
+      }
+      val parts = stream.planInputPartitions(UdpOffset(from), UdpOffset(seq))
+      stream.commit(UdpOffset(seq))
+      val got = parts.toSeq.flatMap(_.asInstanceOf[PacketSlice].rows.toSeq
+        .map { case (us, peer, payload) => (us, peer, payload.toSeq) })
+      assert(got == sent, s"$count x $size B: slices do not concatenate to the batch")
+      assert(parts.length <= 4)
+      parts.length
+    }
+    try {
+      assert(slices(13, 1000) == 1)       // 13 KB
+      assert(slices(13, 48 * 1000) == 4)  // 624 KB: capped at partitions
+      assert(slices(10, 30 * 1000) == 3)  // 300 KB
+    } finally {
+      stream.stop()
+      UdpFlowSource.clear(key)
+    }
+  }
+
+  test("udp source: a joiner's template and data in one small batch all decode with partitions=4") {
+    // FlowApp's decode path. Each batch carries a new exporter's v9
+    // template followed by 7 data packets; a batch this small is one
+    // slice, so the template decodes before its data in the same task.
+    // If a trigger fires mid-injection, the template lands in an earlier
+    // batch and the TemplateStore scope carries it, so that race cannot
+    // fail the test. Limit: a batch above one slice (128 KiB) is still
+    // cut by position and can split an exporter's template from its data
+    // (ROADMAP direction 1).
+    import spark.implicits._
+    val key = "0.0.0.0:9906"
+    val scope = "test-joiner:9906"
+    UdpFlowSource.clear(key)
+    FlowPipeline.TemplateStore.clear(scope)
+    val packets = spark.readStream.format("udp-flows")
+      .option("port", "9906").option("socket", "false")
+      .option("partitions", "4").load()
+    val q = FlowPipeline.decode(packets, Some(scope))
+      .toDF().writeStream.format("memory").queryName("joiner_flows")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      (0 until 20).foreach { b =>
+        val peer = s"10.77.0.$b"
+        UdpFlowSource.inject(key, 1700000000000000L + b * 8, peer, v9TemplateOnly())
+        (0 until 7).foreach { i =>
+          UdpFlowSource.inject(key, 1700000000000001L + b * 8 + i, peer,
+            v9DataOnly(9000 + b * 7 + i, 100 + i))
+        }
+        q.processAllAvailable()
+      }
+      val got = spark.sql("SELECT exporter, src_port FROM joiner_flows")
+        .as[(String, Int)].collect().toSet
+      val want = (0 until 20).flatMap(b =>
+        (0 until 7).map(i => (s"10.77.0.$b", 9000 + b * 7 + i))).toSet
+      val lost = want -- got
+      assert(lost.isEmpty && got.size == 140,
+        s"${lost.size} of 140 records lost, e.g. ${lost.toSeq.sorted.take(5)}")
+    } finally {
+      q.stop()
+      FlowPipeline.TemplateStore.clear(scope)
+      UdpFlowSource.clear(key)
+    }
   }
 
   test("desampleEachBatch: streaming flows join an options snapshot per micro-batch") {
